@@ -9,12 +9,20 @@ between engines.
 
 from __future__ import annotations
 
+import re
+
 from gcp_etl_spark.queries.registry import query
-from gcp_etl_spark.tables import register_views
+from gcp_etl_spark.tables import TABLES, register_views
+
+
+def referenced_tables(sql: str) -> tuple[str, ...]:
+    """The testdata tables a statement names, as whole identifiers
+    (case-insensitive, as Spark resolves them)."""
+    return tuple(n for n in TABLES if re.search(rf"\b{n}\b", sql, re.IGNORECASE))
 
 
 def _sql(spark, sf_dir, sql):
-    register_views(spark, sf_dir)
+    register_views(spark, sf_dir, referenced_tables(sql))
     return spark.sql(sql)
 
 

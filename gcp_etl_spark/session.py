@@ -73,6 +73,16 @@ def get_spark(
     ``k8s/submit/etl-on-gcp-vinicius-campos.py``: AQE ``:73``, coalesce
     ``:76-79``, advisory 128 MB ``:79``, preferSortMergeJoin ``:85``,
     broadcastTimeout ``:72``, Kryo ``:80``, speculation off ``:71``.
+
+    DataFrame debugging is off: with it on, PySpark 4 wraps every
+    ``functions``/``Column`` call to capture its Python call site, which
+    costs a stack walk and 3-5 py4j round trips per call (one
+    ``analytics_rolling_origin_backtest`` build makes 954 py4j calls
+    with it and 243 without). The capture only adds the Python
+    file:line fragment to error messages; the JVM's expression context
+    is still reported. PySpark reads the flag once per process, from
+    the active session on the first wrapped call, so it is set on the
+    builder: a ``spark.conf.set`` afterwards would have no effect.
     """
     cpus = cpus or DEFAULT_CPUS
     shuffle_partitions = shuffle_partitions or cpus
@@ -99,6 +109,8 @@ def get_spark(
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
         # -- quiet & headless --
         .config("spark.ui.enabled", "false")
+        # -- no Python call-site capture per Column call (see docstring) --
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     avro_jar = find_avro_jar()
     if avro_jar:

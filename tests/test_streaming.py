@@ -21,8 +21,8 @@ from tests.conftest import SF_SMALL
 
 @pytest.fixture(scope="module")
 def events_stream_dir(spark, tmp_path_factory):
-    # re-write events with µs timestamps (stream source can't read the
-    # nanos parquet either); one file = one deterministic micro-batch
+    # re-write events as one file, so the stream source sees one
+    # deterministic micro-batch
     d = tmp_path_factory.mktemp("events_stream")
     ev = t(spark, SF_SMALL, "events")
     ev.coalesce(1).write.mode("overwrite").parquet(str(d / "events"))
