@@ -18,6 +18,7 @@ from __future__ import annotations
 import os
 import shutil
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -65,19 +66,6 @@ def ingest_zip(source: str, landing_dir: str) -> list[str]:
     return extracted
 
 
-def has_avro(spark: SparkSession) -> bool:
-    """The avro datasource lives in the external spark-avro module
-    (a separate jar, reference pins it at
-    ``k8s/submit/spark-avro_2.12-3.1.2.jar``). Not bundled with stock
-    pyspark — probe once and let callers fall back."""
-    try:
-        spark.read.format("avro").load("/nonexistent___probe")
-    except Exception as e:  # noqa: BLE001
-        msg = str(e)
-        return "AVRO" not in msg.upper() or "Path does not exist" in msg
-    return True
-
-
 def read_json(
     spark: SparkSession,
     path: str,
@@ -103,10 +91,18 @@ def read_csv(
     return r.csv(path)
 
 
-def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+def read_parquet(
+    spark: SparkSession, path: str, schema: T.StructType | None = None
+) -> DataFrame:
     """Parquet scan — path may be a glob (reference reads
-    ``…/transformation/*.parquet``)."""
-    return spark.read.parquet(path)
+    ``…/transformation/*.parquet``). Without ``schema`` Spark infers it
+    from the footers, which costs one job; pass the writer's schema to
+    read back a zone this process just wrote — Spark stores that schema
+    in the footer, so it is exactly what inference would return."""
+    r = spark.read
+    if schema is not None:
+        r = r.schema(schema)
+    return r.parquet(path)
 
 
 def write_parquet(
@@ -123,13 +119,15 @@ def write_parquet(
 
 def write_avro(df: DataFrame, path: str, mode: str = "overwrite") -> bool:
     """Avro sink (reference's curated-zone format, chosen for its row
-    orientation, ``README.md:394``). Returns False when the spark-avro
-    jar is absent (this container) — callers fall back to parquet."""
+    orientation, ``README.md:394``). Returns False only when the
+    spark-avro jar is absent (Spark's "Failed to find data source:
+    avro" condition) — callers fall back to parquet. Any other error,
+    such as a real Avro write error with the jar present, propagates."""
     try:
         df.write.format("avro").mode(mode).save(path)
         return True
-    except Exception as e:  # noqa: BLE001
-        if "Failed to find" in str(e) or "AVRO" in str(e).upper():
+    except AnalysisException as e:
+        if e.getCondition() == "_LEGACY_ERROR_TEMP_1139":
             return False
         raise
 
@@ -140,9 +138,11 @@ def serving_sink(
     """Warehouse-style serving sink: overwrite-write + register as a
     queryable table — the engine-local analog of the reference's
     GCS→BigQuery ``WRITE_TRUNCATE`` load + autodetect
-    (``k8s/dags/etl-gcp-vinicius-campos.py:132-142``)."""
+    (``k8s/dags/etl-gcp-vinicius-campos.py:132-142``). The table is
+    read back with ``df.schema``, the schema just written, so the
+    read-back starts no footer-inference job."""
     write_parquet(df, path, mode="overwrite")
-    served = spark.read.parquet(path)
+    served = read_parquet(spark, path, df.schema)
     served.createOrReplaceTempView(table_name)
     return served
 

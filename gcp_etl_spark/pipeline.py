@@ -128,31 +128,39 @@ def run_medallion(
         raise ValueError("quality gate: landing zone is empty")
     stages.append("landing->processing(parquet+observed gate)")
 
-    # processing → curated (R6-R13): view + SQL + avro (fallback parquet)
-    df = io.read_parquet(spark, processing_path)
+    # processing → curated (R6-R13): view + SQL + avro (fallback parquet).
+    # Each zone is read back with the schema its writer just wrote
+    # (Spark stores it in the footer), so no read-back starts a
+    # schema-inference job. The curated count rides the curated write
+    # as an Observation, as R4 does, which leaves the query result a
+    # single consumer: the reference's R12 cache is single-use too
+    # (SURVEY.md R12), so there is none here.
+    df = io.read_parquet(spark, processing_path, raw.schema)
     df.createOrReplaceTempView(view_name)
     sql = query or f"SELECT * FROM {view_name} ORDER BY 1 LIMIT 100"
     out = spark.sql(sql)
     spark.catalog.dropTempView(view_name)  # R11
-    out = out.cache()  # R12 — reused below for write + count
+    written = Observation("curated_gate")
+    observed = out.observe(written, F.count(F.lit(1)).alias("n"))
     curated_path = f"{workdir}/curated"
-    if io.write_avro(out, curated_path):
-        curated_format, curated = "avro", spark.read.format("avro").load(curated_path)
+    if io.write_avro(observed, curated_path):
+        curated_format = "avro"
+        curated = spark.read.format("avro").schema(out.schema).load(curated_path)
     else:
-        io.write_parquet(out, curated_path)
-        curated_format, curated = "parquet", io.read_parquet(spark, curated_path)
-    curated_count = curated.count()
+        io.write_parquet(observed, curated_path)
+        curated_format = "parquet"
+        curated = io.read_parquet(spark, curated_path, out.schema)
+    curated_count = written.get["n"]
     stages.append(f"processing->curated({curated_format})")
 
     # curated → serving + count(*) gate (R14-R15)
-    served = io.serving_sink(spark, curated, f"{workdir}/serving", "serving_table")
+    io.serving_sink(spark, curated, f"{workdir}/serving", "serving_table")
     served_count = spark.sql(
         "SELECT count(*) AS n FROM serving_table"
     ).collect()[0]["n"]
     if not served_count:
         raise ValueError("quality gate: serving table is empty (R15)")
     stages.append("curated->serving(+count gate)")
-    out.unpersist()
 
     return PipelineResult(
         landing_count=landing_count,

@@ -162,9 +162,11 @@ def udf_map_in_pandas(spark, sf_dir):
 )
 def udf_python_row(spark, sf_dir):
     """Row-at-a-time Python UDF — API parity only; 10-100× slower than
-    the pandas path (per-row pickle), never used in hot paths."""
+    the pandas path (per-row pickle), never used in hot paths.
+    ``useArrow=False`` pins the row-at-a-time eval type, so PySpark
+    does not try to infer a pandas UDF type from the hints."""
 
-    @F.udf(T.StringType())
+    @F.udf(T.StringType(), useArrow=False)
     def rev(s: str) -> str:
         return s[::-1] if s is not None else None
 

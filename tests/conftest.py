@@ -37,3 +37,14 @@ def duck():
             f"SELECT * FROM read_parquet('{SF_SMALL}/{name}.parquet')"
         )
     yield con
+
+
+def jobs_started(spark, fn, group: str) -> int:
+    """Number of Spark jobs ``fn()`` starts, counted by job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))

@@ -9,8 +9,9 @@ import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from gcp_etl_spark import io
+from gcp_etl_spark import io, session
 from gcp_etl_spark.pipeline import run_medallion
+from tests.conftest import jobs_started
 
 AIRPORT_FIELDS = [
     "ident", "type", "name", "elevation_ft", "continent", "iso_country",
@@ -117,11 +118,38 @@ def test_csv_roundtrip(spark, tmp_path):
 
 
 def test_avro_fallback_probe(spark, tmp_path):
-    """spark-avro jar is absent in this container (reference ships it
-    as k8s/submit/spark-avro_2.12-3.1.2.jar) — write_avro must fail
-    soft, returning False, so pipelines fall back to parquet."""
+    """The spark-avro jar is external (reference ships it as
+    k8s/submit/spark-avro_2.12-3.1.2.jar): write_avro writes Avro when
+    the session found the jar, and fails soft, returning False so
+    pipelines fall back to parquet, when it did not."""
     df = spark.range(3)
-    assert io.write_avro(df, str(tmp_path / "avro")) in (True, False)
+    assert io.write_avro(df, str(tmp_path / "avro")) is (
+        session.find_avro_jar() is not None)
+
+
+def test_avro_write_error_is_not_a_fallback(spark):
+    """Only the missing-data-source condition falls back; any other
+    analysis error propagates, even when its message names Avro."""
+    from pyspark.errors import AnalysisException
+
+    with pytest.raises(AnalysisException) as caught:
+        spark.sql("SELECT avro_field_missing").schema
+    err = caught.value
+
+    class FailingWrite:
+        write = property(lambda self: self)
+
+        def format(self, _):
+            return self
+
+        def mode(self, _):
+            return self
+
+        def save(self, _):
+            raise err
+
+    with pytest.raises(AnalysisException, match="avro_field_missing"):
+        io.write_avro(FailingWrite(), "unused")
 
 
 def test_ingest_zip_to_medallion_e2e(spark, tmp_path):
@@ -263,3 +291,82 @@ def test_retry_exhaustion_propagates(spark, tmp_path, monkeypatch):
         run_medallion_with_retries(
             spark, landing, str(tmp_path / "work"), retries=2
         )
+
+
+def write_nested_json(path, n=120):
+    with open(path, "w") as f:
+        for i in range(n):
+            rec = {
+                "ident": f"AP{i:05d}",
+                "loc": {"lat": (i % 179) - 89.5, "lon": None if i % 9 == 0
+                        else (i % 359) - 179.25},
+                "tags": [f"t{j}" for j in range(i % 4)],
+                "runways": [{"len_ft": 1000 + 7 * i + j, "lit": j % 2 == 0}
+                            for j in range(i % 3)],
+            }
+            f.write(json.dumps(rec) + "\n")
+
+
+def test_medallion_starts_at_most_six_jobs(spark, tmp_path):
+    """Landing inference, the processing write, the curated write, the
+    serving write and the R15 count(*) gate: no zone read-back infers
+    its schema and the curated count rides the curated write."""
+    landing = str(tmp_path / "airports.json")
+    write_airports_json(landing)
+    work = str(tmp_path / "work")
+    assert jobs_started(
+        spark, lambda: run_medallion(spark, landing, work), "medallion_jobs"
+    ) <= 6
+
+
+@pytest.mark.parametrize("case", ["default", "count_query", "nested_landing"])
+def test_zone_read_back_schema_equals_footer(spark, tmp_path, monkeypatch, case):
+    """Each zone is read back with a declared schema, and that schema is
+    exactly the one Spark infers from the zone's footers, including a
+    count(*) column, non-nullable in the plan, and nested structs and
+    arrays inferred from the landing."""
+    landing = str(tmp_path / "landing.json")
+    query = None
+    if case == "nested_landing":
+        write_nested_json(landing)
+    else:
+        write_airports_json(landing)
+    if case == "count_query":
+        query = ("SELECT type, count(*) AS n, max(elevation_ft) AS top "
+                 "FROM df GROUP BY type ORDER BY type")
+    declared = {}
+    real = io.read_parquet
+
+    def recording(spark_, path, schema=None):
+        assert schema is not None, path
+        df = real(spark_, path, schema)
+        declared[path] = df.schema
+        return df
+
+    monkeypatch.setattr(io, "read_parquet", recording)
+    work = str(tmp_path / "work")
+    run_medallion(spark, landing, work, query=query)
+    zones = [f"{work}/{z}" for z in ("processing", "curated", "serving")]
+    assert sorted(declared) == sorted(zones)
+    for path in zones:
+        assert declared[path] == spark.read.parquet(path).schema, path
+    if case == "count_query":
+        # the plan declares n non-nullable; Parquet stores every field nullable
+        spark.read.parquet(zones[0]).createOrReplaceTempView("df")
+        try:
+            assert spark.sql(query).schema["n"].nullable is False
+        finally:
+            spark.catalog.dropTempView("df")
+
+
+def test_curated_count_equals_fresh_count(spark, tmp_path):
+    landing = str(tmp_path / "airports.json")
+    write_airports_json(landing)
+    work = str(tmp_path / "work")
+    res = run_medallion(
+        spark, landing, work,
+        query="SELECT * FROM df WHERE elevation_ft IS NOT NULL",
+    )
+    fresh = spark.read.parquet(f"{work}/curated").count()
+    assert fresh == 200 - len(range(0, 200, 7))
+    assert res.curated_count == fresh == res.served_count

@@ -12,7 +12,7 @@ import pytest
 
 from gcp_etl_spark.queries import subqueries
 from gcp_etl_spark.tables import TABLES, t
-from tests.conftest import SF_SMALL
+from tests.conftest import SF_SMALL, jobs_started
 
 SF_DIRS = sorted(glob.glob(os.path.join(os.path.dirname(SF_SMALL), "sf*")))
 
@@ -45,23 +45,13 @@ def test_t_rejects_unknown_table():
         t(None, SF_SMALL, "nope")
 
 
-def _jobs_started(spark, fn, group: str) -> int:
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    try:
-        fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    return len(sc.statusTracker().getJobIdsForGroup(group))
-
-
 def test_t_starts_no_spark_job(spark):
     sf_dir = SF_SMALL
     # the probe sees the job that footer inference starts
-    assert _jobs_started(
+    assert jobs_started(
         spark, lambda: spark.read.parquet(f"{sf_dir}/lineitem.parquet"),
         "probe_inferred") >= 1
-    assert _jobs_started(
+    assert jobs_started(
         spark, lambda: [t(spark, sf_dir, name) for name in TABLES],
         "probe_declared") == 0
 
