@@ -1,100 +1,42 @@
-"""Benchmark harness — runs the declared query corpus at sf0.1.
+"""Benchmark harness: runs the declared query corpus at sf0.1.
 
-Prints ONE JSON line (last on stdout) the driver can parse:
-  {"metric": "...", "value": <total sec>, "unit": "sec",
-   "sf": 0.1, "n_queries": N, "queries": {<ALL queries, slowest first>}}
-The per-query map in the final line is COMPLETE as of r13 (r12 verdict
-ask #2: the old top-5-only map made the driver's round-over-round PERF
-comparison cover 3 queries). Headline fields precede the map so a
-truncated capture still carries the totals; the full timing map (plus
-raw passes and telemetry) also goes to BENCH_DETAIL.json next to this
-file, and a round-stamped copy (BENCH_DETAIL_r{n}.json; scaling runs
-at SPARK_GRAFT_CPUS != 32 write BENCH_DETAIL_r{n}_c{cpus}.json so they
-never collide with the round's main record — r12 ask #7) is left for
-diffing per-query timings across rounds.
+One measurement regime for every record:
+  * one SparkSession per run, restarted after every RESTART_EVERY
+    executed queries (accumulated plans and codegen classes in one
+    long-lived JVM degrade the tail of the suite); every new session
+    first runs SESSION_WARMUP, untimed;
+  * per query, one warm-up pass and then k measured passes; k is
+    PASSES_FAST when the warm-up took under SLOW_SEC, else PASSES_SLOW.
+    The record is the median of the measured passes;
+  * before every pass, cached relations and persisted RDDs are dropped
+    (``_cleanup``), so no pass reuses data an earlier pass cached; after
+    every query the driver JVM is asked to GC.
 
-Execution is forced through the ``noop`` datasource writer (full plan
-runs on the executors, nothing is collected to the driver), which is
-the honest way to time a distributed plan. Each query is timed after a
-one-query warmup of the JVM/codegen paths.
+A pass is ``fn(spark, sf_dir)`` plus a ``noop`` write: the full plan
+runs on the executors and nothing is collected to the driver.
 
-Round-3 lesson: the driver's capture ran under heavy host contention
-and recorded 3-10x inflated numbers for the heavy queries (verified
-unreproducible on idle hardware). Two defenses here:
-  * every query records the 1-minute loadavg + process count at its
-    start, so a contended record is self-diagnosing;
-  * any query whose first pass takes >= MIN2_THRESHOLD_SEC is re-run
-    once from a clean cache and the SECOND pass is recorded — it is
-    consistently warm (OS page cache + JIT hot), where min-of-2 (the
-    r4 policy) systematically biased records downward (r4 ADVICE).
-    If pass-2 blows up past 2x pass-1 (r5 lesson: a 55 s GC-noise
-    pass-2 became analytics_bootstrap_ci's official record), a THIRD
-    pass runs and the MEDIAN of the three is recorded. All raw passes
-    stay in the detail file with per-query ``timing`` provenance
-    (pass1 / pass2_warm / median3 — r5 ADVICE); the headline carries
-    ``timing: pass2_warm_if_slow`` naming the policy.
+The detail file keeps, per query, the median, the min, the warm-up
+time, and per measured pass the time, the host's CPU steal and iowait
+shares (``/proc/stat``) and the driver JVM's GC and JIT ms.
 
-On the r4/r5-verdict nit "mirror the full per-query map into
-BENCH_r{n}.json": the round-1 driver capture truncated a ~5 KB single
-line to ``parsed: null`` (commit dccd743), so the PARSED headline stays
-short (distribution stats + a ``detail`` pointer to
-BENCH_DETAIL_r{n}.json). r5 ask #8's retry ships as a PENULTIMATE
-``per_query_map`` JSON line: the driver's last-JSON-line parse (proven
-by the partial-headline cadence riding earlier lines since r2) keeps
-the short headline authoritative, while a raw-stdout capture now also
-contains the full map.
+A full run also measures the CANARY queries, with the same per-query
+function, at its start and at its end; ``canary_end_vs_start`` (end
+total / start total) is the run's drift against itself. ``steal`` is
+the host's CPU steal share over the whole run.
 
-Round-8 hygiene (r7 verdict ask #1: the 469.6 s r7 headline was
-contention-dominated — load1 4.8-7.9, 275-341 host procs — vs a 411.3 s
-quieter same-corpus pass; that gap exceeded every real plan change):
-  * LOAD GATE: before each measured pass, if load1 exceeds the gate
-    (default 4.0 — r7's skewed records were taken at load1 4.8+; env
-    SPARK_GRAFT_BENCH_LOAD_GATE) the bench sleeps and resamples up to
-    6 times (suite-wide sleep budget 600 s so a permanently-busy host
-    still finishes), then proceeds, marking the pass contended.
-  * MIN UNDER LOAD: when EVERY pass of a query ran contended, the
-    record is min(passes) — the pass2-warm rationale (record the warm
-    second pass) assumes a quiet host; under load the minimum is the
-    least-contaminated observation.
-  * the headline JSON carries ``contended_queries`` (count of queries
-    whose RECORDED pass started above the gate) so a polluted suite
-    number is self-diagnosing at the headline level.
+Prints a partial headline every 20 queries and ONE final JSON line,
+last on stdout, headline fields first:
+  {"metric", "value" (sum of records, sec), "unit", "sf", "n_queries",
+   "timing", "q_median", "q_p90", "canary_end_vs_start", "steal",
+   "wall_s", "detail", "load1", "procs", "n_failures",
+   "queries": {<every query, slowest first>}}
 
-Round-9 hygiene (r8 verdict asks #1/#2: agg_weighted_median recorded
-20.35 s in-suite on BOTH passes at load1 1.8 vs 3.36 s isolated warm,
-with no code diff — and the identical 27-query alphabetical prefix
-re-run next round measured 2.87 s, so the pollution was TRANSIENT HOST
-INTERFERENCE invisible to loadavg, most plausibly an IO stall):
-  * per-pass /proc/stat iowait share + per-record block-manager
-    storage telemetry (cached RDDs / blocks / bytes) make both failure
-    modes self-diagnosing in the detail file;
-  * FRESH-SESSION RE-PASS: a record >= 3x its prior-round number on a
-    quiet host (load1 under the gate) gets one re-run in a NEW
-    SparkSession; the record is the min, provenance
-    ``repass_fresh_session`` — a genuine regression reproduces in the
-    fresh session, polluted session/host state does not.
-
-Round-10 hygiene (r9 verdict ask #1: 17 records stamped contended=True
-because the host stayed above the load gate across a stretch of the
-suite; r8 had 1 — the host was noisy, not the engine):
-  * POST-SUITE RETRY QUEUE: after the full pass, every record whose
-    decisive pass started above the gate is re-run ONCE in a fresh
-    session at the then-current load; the record is the min. A quiet
-    retry that does NOT beat the original clears the contended flag
-    (the number was confirmed, not inflated); a retry that is itself
-    contended leaves the original standing as documented
-    irreducible host noise. Raw retry passes/loads/iowait stay in
-    the detail file under retry_* keys.
-
-Env knobs: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1),
-SPARK_GRAFT_CPUS (default 32), SPARK_GRAFT_BENCH_ONLY (comma list),
-SPARK_GRAFT_BENCH_MIN2 (threshold sec, default 2; 0 disables),
-SPARK_GRAFT_BENCH_LOAD_GATE (load1 gate, default 4.0; 0 disables),
-SPARK_GRAFT_BENCH_PRIOR_FILE (explicit prior-round detail file — the
-fresh-session re-pass rule's test/demo hook),
-SPARK_GRAFT_BENCH_LOAD_SCHEDULE (JSON file of load1 values consumed
-one per gate call — the retry-queue rule's test/demo hook),
-SPARK_GRAFT_ROUND (round stamp for the detail snapshot filename).
+Env: SPARK_GRAFT_SF_DIR (default: the sf0.1 fixture), SPARK_GRAFT_CPUS
+(default 32; other counts suffix the detail file with ``_c{cpus}``),
+SPARK_GRAFT_BENCH_ONLY (comma list of query names: a subset run, with
+no canary, that writes only BENCH_DETAIL.json), SPARK_GRAFT_BENCH_OUT_DIR
+(default: next to this file) and SPARK_GRAFT_ROUND (round stamp of the
+BENCH_DETAIL_r{n}.json a full run also writes).
 """
 
 from __future__ import annotations
@@ -103,237 +45,140 @@ import glob
 import json
 import os
 import re
+import statistics
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
-
-from gcp_etl_spark.queries import load_all
-from gcp_etl_spark.session import get_spark
-
 HERE = os.path.dirname(os.path.abspath(__file__))
-MIN2_THRESHOLD_SEC = float(os.environ.get("SPARK_GRAFT_BENCH_MIN2", "2"))
-LOAD_GATE = float(os.environ.get("SPARK_GRAFT_BENCH_LOAD_GATE", "4.0"))
-_SLEEP_BUDGET = [600.0]  # suite-wide seconds the gate may spend waiting
+sys.path.insert(0, HERE)
 
-# silence the known-benign WindowExec warnings in the bench tail ONLY —
-# library sessions keep them (see session._quiet_benign_warnings)
-os.environ.setdefault("SPARK_GRAFT_QUIET_BENIGN", "1")
+from gcp_etl_spark.queries import load_all  # noqa: E402
+from gcp_etl_spark.session import get_spark  # noqa: E402
+
+TIMING = "warmup_then_median_of_k"
+SLOW_SEC = 2.0  # warm-up time from which a query gets PASSES_SLOW
+PASSES_FAST = 3
+PASSES_SLOW = 1
+RESTART_EVERY = 100  # executed queries per session
+PARTIAL_EVERY = 20  # executed queries per partial headline
+# run untimed in every new session, so the first query's warm-up (which
+# sets its k) does not pay for the session's start
+SESSION_WARMUP = "q1_pricing_summary"
+
+# Ten queries across ten families near the suite's median cost, so the
+# canary tracks broad drift, not one plan.
+CANARY = (
+    "q11_full_derived_partsupp",
+    "subq_in",
+    "agg_central_moments",
+    "sketch_hll_merge",
+    "q13_customer_distribution",
+    "bpe_encode_tokens",
+    "basket_cooccurrence",
+    "text_collocations_pmi",
+    "dedup_prefix_filter",
+    "analytics_conversion_latency",
+)
 
 
 def force(df) -> None:
     df.write.format("noop").mode("overwrite").save()
 
 
-# ---------------------------------------------------------------------
-# A/B CANARY (r10 verdict ask #3): a pinned 10-query subset with its
-# RECORDED r8 timings baked in as literals (BENCH_DETAIL_r08.json,
-# pass2_warm records at sf0.1). The subset re-runs at suite START and
-# suite END each round; its total vs the pinned r8 total separates
-# HOST drift from ENGINE drift — if the canary reproduces the prior
-# numbers while the suite ran slow, the inflation was host-side; if
-# the canary itself is inflated with plan fingerprints green, the
-# overhead is engine-side and needs bisecting. Queries chosen at the
-# r10/r8 MEDIAN ratio (not the regressed tail) across 10 families so
-# the canary measures the broad drift, not a specific plan.
-CANARY_R8: dict[str, float] = {
-    "q11_full_derived_partsupp": 0.829,
-    "subq_in": 0.822,
-    "agg_central_moments": 0.803,
-    "sketch_hll_merge": 0.835,
-    "q13_customer_distribution": 0.645,
-    "bpe_encode_tokens": 0.726,
-    "basket_cooccurrence": 1.903,
-    "text_collocations_pmi": 1.44,
-    "dedup_prefix_filter": 3.062,
-    "analytics_conversion_latency": 0.94,
-}
-
-
-def _run_canary(spark, specs, sf_dir: str, label: str) -> dict:
-    """Run the pinned canary subset (two passes each, min — the same
-    warm-record convention as the r8 numbers being compared against)
-    and return a telemetry block for the detail file + headline."""
-    per: dict[str, float] = {}
-    for name, r8_sec in CANARY_R8.items():
-        spec = specs.get(name)
-        if spec is None:  # pragma: no cover - canary query renamed
-            continue
-        best = None
-        try:
-            for _ in range(2):
-                t0 = time.time()
-                force(spec.fn(spark, sf_dir))
-                took = time.time() - t0
-                best = took if best is None else min(best, took)
-        except Exception as e:  # noqa: BLE001 - canary must not kill bench
-            print(f"# bench canary FAILURE {name}: {e}", file=sys.stderr)
-            continue
-        per[name] = round(best, 3)
-    pinned = sum(v for k, v in CANARY_R8.items() if k in per)
-    total = round(sum(per.values()), 3)
-    block = {
-        "label": label,
-        "total_sec": total,
-        "r8_pinned_sec": round(pinned, 3),
-        "ratio_vs_r8": round(total / pinned, 3) if pinned else None,
-        **_host_load(),
-        "queries": per,
-    }
-    return block
+def n_passes(warmup_sec: float) -> int:
+    return PASSES_FAST if warmup_sec < SLOW_SEC else PASSES_SLOW
 
 
 def _host_load() -> dict:
-    """1-minute loadavg + running process count, captured per query so a
-    contended bench record is self-diagnosing (round-3 lesson)."""
-    out: dict = {}
-    try:
-        out["load1"] = round(os.getloadavg()[0], 1)
-    except OSError:  # pragma: no cover - getloadavg always works on linux
-        pass
-    try:
-        out["procs"] = sum(
-            1 for p in os.listdir("/proc") if p.isdigit()
-        )
-    except OSError:  # pragma: no cover
-        pass
+    out = {"load1": round(os.getloadavg()[0], 1)}
+    out["procs"] = sum(1 for p in os.listdir("/proc") if p.isdigit())
     return out
 
 
-def _proc_stat() -> tuple[int, int, int] | None:
-    """(iowait, total, steal) jiffies from /proc/stat — sampled around
-    each measured pass so an IO-stalled record is self-diagnosing. r8's
-    agg_weighted_median anomaly (20.35 s in-suite at load1 1.8 vs
-    3.36 s isolated; unreproducible with the identical 27-query prefix
-    re-run next round, 2.87 s) was transient host interference that
-    loadavg never showed — tasks in uninterruptible IO sleep inflate
-    wall time without inflating load1 on a 32-core box.
-
-    STEAL (r12): the round's 20–30 s warm-JVM outlier passes carried
-    NO in-guest signal (gc/jit/iowait/load1 all normal) because the
-    time was stolen by the HYPERVISOR — /proc/stat col 8 is the only
-    place co-tenant VM bursts are visible from inside the guest (the
-    r12 probe reproduced 20.5/21.9 s dedup_prefix_filter passes on a
-    quiet guest and the thread dumps showed an idle JVM both times).
-    A pass with high steal share is host weather by definition, never
-    an engine regression."""
-    try:
-        with open("/proc/stat") as f:
-            parts = f.readline().split()
-        vals = [int(x) for x in parts[1:]]
-        return vals[4], sum(vals), vals[7]  # iowait, total, steal
-    except (OSError, ValueError, IndexError):  # pragma: no cover
-        return None
+def _proc_stat() -> tuple[int, int, int]:
+    """(iowait, total, steal) jiffies of the host's CPUs. Steal is time
+    the hypervisor gave to other guests: no in-guest counter shows it,
+    so a pass with a high steal share is host weather, not engine."""
+    with open("/proc/stat") as f:
+        vals = [int(x) for x in f.readline().split()[1:]]
+    return vals[4], sum(vals), vals[7]
 
 
-def _test_sleep(name: str) -> None:
-    """test/demo hook (tests/test_bench_policy.py): ``query:sec`` in
-    SPARK_GRAFT_BENCH_SLEEP adds a constant to every measured pass of
-    that query, so ratio-triggered policy rules (fresh-session gate,
-    regressed_vs_prior) are demonstrable at a chosen, deterministic
-    ratio instead of relying on host timing luck."""
-    spec = os.environ.get("SPARK_GRAFT_BENCH_SLEEP", "")
-    if spec:
-        q, _, sec = spec.partition(":")
-        if q == name:
-            time.sleep(float(sec))
+def _share(a: tuple, b: tuple, i: int) -> float:
+    win = b[1] - a[1]
+    return round((b[i] - a[i]) / win, 4) if win > 0 else 0.0
 
 
-def _jvm_counters(spark) -> tuple[int, int] | None:
-    """Cumulative driver-JVM (gc_ms, jit_ms) from the management beans
-    — sampled around each measured pass so an outlier record is
-    self-diagnosing as GC pressure vs JIT compilation vs host
-    interference (r11 verdict ask #2: dedup_prefix_filter's 87-92 s
-    retry passes at load1 2.5 were recorded with no way to distinguish
-    the three from the artifact)."""
-    try:
-        mf = spark.sparkContext._jvm.java.lang.management.ManagementFactory
-        gc_ms = sum(
-            b.getCollectionTime() for b in mf.getGarbageCollectorMXBeans()
-        )
-        jit_ms = mf.getCompilationMXBean().getTotalCompilationTime()
-        return int(gc_ms), int(jit_ms)
-    except Exception:  # noqa: BLE001 - telemetry must never kill bench
-        return None
+def _jvm_counters(spark) -> tuple[int, int]:
+    """Cumulative driver-JVM (gc_ms, jit_ms)."""
+    mf = spark.sparkContext._jvm.java.lang.management.ManagementFactory
+    gc_ms = sum(b.getCollectionTime() for b in mf.getGarbageCollectorMXBeans())
+    return int(gc_ms), int(mf.getCompilationMXBean().getTotalCompilationTime())
 
 
-def _storage_telemetry(spark) -> dict:
-    """Block-manager storage state (r8 verdict ask #1): cached-RDD
-    count, cached partition/block count, and storage memory+disk bytes
-    via the public ``getRDDStorageInfo`` — recorded per bench query so
-    a session whose block manager is accumulating state (e.g. lazy
-    localCheckpoint blocks surviving cleanup) is visible in the detail
-    file instead of being inferred after the fact."""
-    out: dict = {}
-    try:
-        infos = list(spark.sparkContext._jsc.sc().getRDDStorageInfo())
-        out["rdds_cached"] = len(infos)
-        out["blocks_cached"] = sum(i.numCachedPartitions() for i in infos)
-        out["storage_mem_mb"] = round(
-            sum(i.memSize() for i in infos) / 1048576, 1
-        )
-        disk = sum(i.diskSize() for i in infos)
-        if disk:
-            out["storage_disk_mb"] = round(disk / 1048576, 1)
-    except Exception:  # noqa: BLE001 - telemetry must never kill bench
-        pass
-    return out
+def _cleanup(spark) -> None:
+    """Drop cached relations and persisted RDDs. clearCache covers only
+    the SQL cache manager; localCheckpoint blocks (iterative queries)
+    live as raw persistent RDDs and would otherwise pile up in unified
+    memory, squeezing execution memory for every later query."""
+    spark.catalog.clearCache()
+    for jrdd in spark.sparkContext._jsc.getPersistentRDDs().values():
+        jrdd.unpersist(False)
 
 
-def _gate_load() -> tuple[float, bool]:
-    """Wait (bounded) for the host to quiet down before a measured
-    pass. Returns (load1 at pass start, contended?) where contended
-    means the pass is STARTING above the gate anyway — either the gate
-    is disabled, the retries ran out, or the suite sleep budget is
-    spent (a permanently-busy host must still produce a bench)."""
-    sched_path = os.environ.get("SPARK_GRAFT_BENCH_LOAD_SCHEDULE")
-    if sched_path:
-        # test/demo hook (tests/test_bench_policy.py): a JSON list of
-        # load1 values consumed one per gate call, so the
-        # contended→retry-queue path is demonstrable without a
-        # genuinely-busy host; an exhausted schedule falls through to
-        # the real loadavg
+def measure(spark, fn, sf_dir: str) -> dict:
+    """One warm-up pass, then k measured passes; raises if any fails."""
+    _cleanup(spark)
+    t0 = time.time()
+    force(fn(spark, sf_dir))
+    warmup = round(time.time() - t0, 3)
+    rec: dict = {"warmup": warmup, "passes": [], "pass_steal": [],
+                 "pass_iowait": [], "pass_gc_ms": [], "pass_jit_ms": []}
+    for _ in range(n_passes(warmup)):
+        _cleanup(spark)
+        s0, j0 = _proc_stat(), _jvm_counters(spark)
+        t0 = time.time()
+        force(fn(spark, sf_dir))
+        rec["passes"].append(round(time.time() - t0, 3))
+        s1, j1 = _proc_stat(), _jvm_counters(spark)
+        rec["pass_steal"].append(_share(s0, s1, 2))
+        rec["pass_iowait"].append(_share(s0, s1, 0))
+        rec["pass_gc_ms"].append(j1[0] - j0[0])
+        rec["pass_jit_ms"].append(j1[1] - j0[1])
+    rec["median"] = round(statistics.median(rec["passes"]), 3)
+    rec["min"] = min(rec["passes"])
+    return rec
+
+
+def run_canary(spark, specs, sf_dir: str) -> dict:
+    per: dict[str, dict] = {}
+    for name in CANARY:
         try:
-            with open(sched_path) as f:
-                vals = json.load(f)
-        except Exception:  # noqa: BLE001
-            vals = []
-        if vals:
-            v = float(vals.pop(0))
-            with open(sched_path, "w") as f:
-                json.dump(vals, f)
-            return round(v, 1), bool(LOAD_GATE) and v > LOAD_GATE
+            per[name] = measure(spark, specs[name].fn, sf_dir)
+        except Exception as e:  # noqa: BLE001 - the canary must not kill the run
+            print(f"# bench canary FAILURE {name}: {e}", file=sys.stderr)
+    return {"total_sec": round(sum(r["median"] for r in per.values()), 3),
+            "queries": per}
+
+
+def new_session(specs, sf_dir: str):
+    spark = get_spark("bench")
     try:
-        load = os.getloadavg()[0]
-    except OSError:  # pragma: no cover
-        return 0.0, False
-    if not LOAD_GATE:
-        return round(load, 1), False
-    tries = 6
-    while load > LOAD_GATE and tries > 0 and _SLEEP_BUDGET[0] > 0:
-        nap = min(5.0, _SLEEP_BUDGET[0])
-        time.sleep(nap)
-        _SLEEP_BUDGET[0] -= nap
-        tries -= 1
-        load = os.getloadavg()[0]
-    return round(load, 1), load > LOAD_GATE
+        force(specs[SESSION_WARMUP].fn(spark, sf_dir))
+    except Exception as e:  # noqa: BLE001 - a bad warm-up must not kill the line
+        print(f"# bench session warm-up failed: {e}", file=sys.stderr)
+    return spark
 
 
 def _detail_suffix() -> str:
-    """Filename suffix for non-default core counts (r12 verdict ask #7:
-    the driver's 8-core scaling run wrote its detail to the NEXT
-    round's default filename — ``BENCH_DETAIL_r13.json`` held the r12
-    c8 run, which a real r13 run would clobber). A run at
-    ``SPARK_GRAFT_CPUS != 32`` stamps ``_c{n}`` into the detail
-    filename so scaling runs can never collide with (or be mistaken
-    for) a round's main 32-core record."""
+    """``_c{cpus}`` for runs at a core count other than 32, so a scaling
+    run never collides with a round's main record."""
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     return "" if cpus == "32" else f"_c{cpus}"
 
 
 def _round_stamp() -> int:
-    """Current round number: env override, else 1 + max BENCH_r{n}.json
-    already present (the driver writes those per completed round)."""
+    """Env override, else 1 + the highest BENCH_r{n}.json present."""
     env = os.environ.get("SPARK_GRAFT_ROUND")
     if env and env.isdigit():
         return int(env)
@@ -345,585 +190,102 @@ def _round_stamp() -> int:
     return (max(ns) + 1) if ns else 0
 
 
-def _prior_timings() -> dict:
-    """Per-query timings from the most recent PREVIOUS round's detail
-    file — the baseline for the contention re-pass guard (r6 verdict
-    ask #5: single-pass queries under the MIN2 threshold could record
-    a contended number with no second chance)."""
-    override = os.environ.get("SPARK_GRAFT_BENCH_PRIOR_FILE")
-    if override:
-        # test/demo hook: point the prior-baseline at an explicit file
-        # (the fresh-session re-pass rule is demonstrated by injecting
-        # a tiny prior — tests/test_bench_policy.py)
-        try:
-            with open(override) as f:
-                return json.load(f).get("queries", {})
-        except Exception:  # noqa: BLE001
-            return {}
-    cur = _round_stamp()
-    best_n, best_path = -1, None
-    # like-for-like core counts only: a non-default-CPU scaling run
-    # (suffix _c{n}) compares against prior runs at the SAME core
-    # count — an 8-core record measured against a 32-core prior would
-    # fire the 2.5x contention re-pass on nearly every serial query
-    suffix = _detail_suffix()
-    for p in glob.glob(
-        os.path.join(HERE, f"BENCH_DETAIL_r*{suffix}.json")
-    ):
-        # FINAL round files only: the _pre partials are mid-round
-        # snapshots with stale/missing queries (review finding: the
-        # old pattern matched _pre and strict '>' kept whichever the
-        # glob returned first)
-        m = re.search(
-            rf"BENCH_DETAIL_r(\d+){re.escape(suffix)}\.json$", p
-        )
-        if m and int(m.group(1)) < cur and int(m.group(1)) > best_n:
-            best_n, best_path = int(m.group(1)), p
-    if best_path is None:
-        return {}
-    try:
-        with open(best_path) as f:
-            data = json.load(f)
-        # a baseline from another scale factor would fire the 2.5x
-        # re-pass on nearly every query — ignore it
-        cur_sf_dir = os.environ.get(
-            "SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"
-        )
-        m_sf = re.search(r"sf([0-9.]+)", cur_sf_dir)
-        cur_sf = float(m_sf.group(1)) if m_sf else -1.0
-        if data.get("sf") != cur_sf:
-            return {}
-        return data.get("queries", {})
-    except Exception:  # noqa: BLE001 - a corrupt detail file must not kill bench
-        return {}
+def detail_names(subset: bool) -> list[str]:
+    """Detail files a run writes; the first is the one the headline
+    names. A subset run is not a round record, so it writes only
+    BENCH_DETAIL.json."""
+    if subset:
+        return ["BENCH_DETAIL.json"]
+    return [f"BENCH_DETAIL_r{_round_stamp():02d}{_detail_suffix()}.json",
+            "BENCH_DETAIL.json"]
 
 
-def _dump_detail(
-    sf: float,
-    timings: dict,
-    detail: dict,
-    failures: list,
-    merge: bool = False,
-    extra: dict | None = None,
-) -> None:
-    """Write the full per-query timing map (+ raw passes and host load).
-    Called incrementally (every 20 executed queries) as well as at the
-    end, so an externally-imposed wall timeout still leaves a usable
-    partial detail file. ``merge=True`` (subset runs via
-    SPARK_GRAFT_BENCH_ONLY) folds this run's queries into the existing
-    same-round detail instead of clobbering a full-corpus snapshot
-    with a 2-query map."""
-    if merge:
-        path0 = os.path.join(
-            os.environ.get("SPARK_GRAFT_BENCH_OUT_DIR", HERE),
-            f"BENCH_DETAIL_r{_round_stamp():02d}{_detail_suffix()}.json",
-        )
-        if os.path.exists(path0):
-            try:
-                with open(path0) as f:
-                    old = json.load(f)
-                if old.get("sf") == sf:
-                    timings = {**old.get("queries", {}), **timings}
-                    detail = {**old.get("detail", {}), **detail}
-                    # a query that failed in the full round but succeeds
-                    # in this re-run must LEAVE the failure list (r8
-                    # ADVICE: the plain union kept it in 'failures'
-                    # while also appearing in the merged timing map)
-                    failures = sorted(
-                        (set(old.get("failures", [])) | set(failures))
-                        - set(timings)
-                    )
-                    # top-level extra blocks written by the full-corpus
-                    # run (canary legs, regressed_vs_prior) must SURVIVE
-                    # a subset merge — the r12 top-up runs silently
-                    # dropped the suite's canary blocks from the
-                    # artifact because this branch rebuilt the payload
-                    # without them
-                    for k in ("canary", "regressed_vs_prior"):
-                        if k in old and (extra is None or k not in extra):
-                            extra = {**(extra or {}), k: old[k]}
-            except Exception:  # noqa: BLE001 - corrupt old detail: overwrite
-                pass
-    payload = {
-        "metric": "declared_query_suite_wall",
-        "value": round(sum(timings.values()), 3),
-        "unit": "sec",
-        "sf": sf,
-        "min2_threshold_sec": MIN2_THRESHOLD_SEC,
-        "load_gate": LOAD_GATE,
-        "timing": "pass2_warm_if_slow",
-        "queries": timings,
-        "detail": detail,
-        "failures": failures,
-        **(extra or {}),
-    }
+def _dump_detail(names: list[str], payload: dict) -> None:
     out_dir = os.environ.get("SPARK_GRAFT_BENCH_OUT_DIR", HERE)
-    for path in (
-        os.path.join(out_dir, "BENCH_DETAIL.json"),
-        os.path.join(
-            out_dir,
-            f"BENCH_DETAIL_r{_round_stamp():02d}{_detail_suffix()}.json",
-        ),
-    ):
-        with open(path, "w") as f:
+    for name in names:
+        with open(os.path.join(out_dir, name), "w") as f:
             json.dump(payload, f, indent=1, sort_keys=True)
 
 
 def main() -> None:
+    # silence the known-benign WindowExec warnings in bench sessions ONLY;
+    # library sessions keep them (see session._quiet_benign_warnings)
+    os.environ.setdefault("SPARK_GRAFT_QUIET_BENIGN", "1")
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     m = re.search(r"sf([0-9.]+)", sf_dir)
     sf = float(m.group(1)) if m else -1.0
-    only = {
-        s for s in os.environ.get("SPARK_GRAFT_BENCH_ONLY", "").split(",") if s
-    }
+    only = {s for s in os.environ.get("SPARK_GRAFT_BENCH_ONLY", "").split(",") if s}
+    names = detail_names(bool(only))
+    head = {"metric": "declared_query_suite_wall", "unit": "sec", "sf": sf}
 
+    t_start, stat0 = time.time(), _proc_stat()
     specs = load_all()
-    spark = get_spark("bench")
-
-    # warmup: JVM, codegen, parquet footers (failure-tolerant — a bad
-    # warmup must not suppress the BENCH line)
-    try:
-        force(specs["q1_pricing_summary"].fn(spark, sf_dir))
-    except Exception as e:  # noqa: BLE001
-        print(f"# bench warmup failed: {e}", file=sys.stderr)
-
-    # A/B canary, suite-start leg (full-corpus runs only — a 2-query
-    # SPARK_GRAFT_BENCH_ONLY re-run is not a round record)
-    canary: list[dict] = []
+    spark = new_session(specs, sf_dir)
+    canary: dict = {}
     if not only:
-        canary.append(_run_canary(spark, specs, sf_dir, "suite_start"))
-        spark.catalog.clearCache()
+        canary["start"] = run_canary(spark, specs, sf_dir)
 
-    # measured: gc every 4th query => suite ~17s SLOWER than every
-    # query (heap/codegen pressure degrades the tail); keep 1
-    gc_every = int(os.environ.get("SPARK_GRAFT_BENCH_GC_EVERY", "1"))
-    restart_every = int(
-        os.environ.get("SPARK_GRAFT_BENCH_RESTART_EVERY", "100")
-    )
     timings: dict[str, float] = {}
     detail: dict[str, dict] = {}
     failures: list[str] = []
-
-    def _cleanup() -> None:
-        # isolate queries from each other: drop cached relations every
-        # query — 150 plans in one heap otherwise degrade the tail of
-        # the suite by 2-4x (measured). clearCache only covers the SQL
-        # cache manager; localCheckpoint blocks (iterative queries:
-        # connected components, PageRank) live as raw persistent RDDs
-        # and would otherwise pile up in unified memory, squeezing
-        # execution memory for every later query's sorts/aggregations.
-        spark.catalog.clearCache()
-        try:
-            for jrdd in (
-                spark.sparkContext._jsc.getPersistentRDDs().values()
-            ):
-                jrdd.unpersist(False)
-        except Exception:  # noqa: BLE001 - cleanup must never kill bench
-            pass
-
-    prior = _prior_timings()
     for name, spec in sorted(specs.items()):
         if only and name not in only:
             continue
-        rec: dict = _host_load()
-        passes: list[float] = []
-        pass_loads: list[float] = []
-        pass_hot: list[bool] = []
-        pass_iowait: list[float] = []
-        pass_steal: list[float] = []
-        pass_gc_ms: list[int] = []
-        pass_jit_ms: list[int] = []
-        repassed_for_load = False
-
-        def _measured_pass() -> None:
-            load, hot = _gate_load()
-            pass_loads.append(load)
-            pass_hot.append(hot)
-            io0 = _proc_stat()
-            j0 = _jvm_counters(spark)
-            t0 = time.time()
-            _test_sleep(name)
-            force(spec.fn(spark, sf_dir))
-            passes.append(round(time.time() - t0, 3))
-            io1 = _proc_stat()
-            j1 = _jvm_counters(spark)
-            # host-wide iowait share of the pass window: high values
-            # flag an IO stall that load1 cannot see (r8 anomaly);
-            # steal share flags hypervisor co-tenant bursts that NO
-            # in-guest counter sees (r12 outlier root cause)
-            if io0 and io1 and io1[1] > io0[1]:
-                win = io1[1] - io0[1]
-                pass_iowait.append(round((io1[0] - io0[0]) / win, 4))
-                pass_steal.append(round((io1[2] - io0[2]) / win, 4))
-            else:  # pragma: no cover
-                pass_iowait.append(-1.0)
-                pass_steal.append(-1.0)
-            # per-pass driver-JVM GC / JIT time deltas (ms): an outlier
-            # pass is decidable as GC vs JIT vs host from the artifact
-            if j0 and j1:
-                pass_gc_ms.append(j1[0] - j0[0])
-                pass_jit_ms.append(j1[1] - j0[1])
-
         try:
-            _measured_pass()
-            prev = prior.get(name)
-            if (
-                (not MIN2_THRESHOLD_SEC or passes[0] < MIN2_THRESHOLD_SEC)
-                and prev
-                and passes[0] >= 2.5 * prev
-                and rec.get("load1", 0.0) >= 2.0
-            ):
-                # r6 blind spot: a single contended pass BELOW the
-                # re-pass threshold became the official record
-                # (sketch_heavy_hitters 0.61->1.99 s at load1 3.9).
-                # One clean re-pass, record the MIN; a genuine
-                # regression reproduces, noise does not.
-                repassed_for_load = True
-                rec["prior_sec"] = prev
-                _cleanup()
-                _measured_pass()
-            if MIN2_THRESHOLD_SEC and passes[0] >= MIN2_THRESHOLD_SEC:
-                # one contended pass must not define the record: re-run
-                # once from a clean cache and record the SECOND pass —
-                # consistently warm (OS page cache + JIT), unlike
-                # min-of-2 which biased records downward (r4 ADVICE);
-                # all raw passes stay in the detail file
-                _cleanup()
-                _measured_pass()
-                if passes[1] > 2 * passes[0]:
-                    # r5 lesson (analytics_bootstrap_ci: 2.66 s pass-1,
-                    # 55.1 s pass-2 became the official number): a
-                    # pass-to-pass blowup means GC/contention noise, not
-                    # warmth — run a THIRD pass and record the median
-                    _cleanup()
-                    _measured_pass()
-            if repassed_for_load:
-                timings[name] = min(passes)
-                rec["timing"] = "repass_load"
-            elif len(passes) >= 2 and all(pass_hot):
-                # r7 verdict ask #1b: EVERY pass started above the load
-                # gate (retries exhausted) — the warm-pass-2 rationale
-                # assumes a quiet host, so under sustained load the
-                # minimum is the least-contaminated observation
-                timings[name] = min(passes)
-                rec["timing"] = "min_contended"
-            elif len(passes) == 3:
-                timings[name] = sorted(passes)[1]
-                rec["timing"] = "median3"
-            else:
-                timings[name] = passes[-1]
-                # per-query provenance (r5 ADVICE: the old single
-                # 'pass2_warm' label mixed cold one-pass and warm
-                # two-pass records)
-                rec["timing"] = "pass2_warm" if len(passes) == 2 else "pass1"
-            # FRESH-SESSION ANOMALY RE-PASS (r8 verdict ask #2): a
-            # record blowing >=2x past its prior-round number on a
-            # QUIET host (load1 under the gate — the load gate catches
-            # host contention but not session-state pollution or an IO
-            # stall, r8's blind spot) gets ONE re-run in a brand-new
-            # SparkSession. A genuine plan regression reproduces there;
-            # polluted state does not. The record is the MIN across
-            # sessions, provenance 'repass_fresh_session'.
-            prev = prior.get(name)
-            if (
-                prev
-                # 2.0x, aligned with the regressed_vs_prior headline
-                # threshold (r11 verdict ask #3: the old 3.0x gate left
-                # a 2.0-3.0x blind window where a quiet regression was
-                # never fresh-session-confirmed and so could never
-                # reach the headline — dedup_survivorship shipped a
-                # 2.07x drift unflagged that way)
-                and timings[name] >= 2.0 * prev
-                and (not LOAD_GATE or rec.get("load1", 0.0) < LOAD_GATE)
-            ):
-                rec["prior_sec"] = prev
-                spark.stop()
-                spark = get_spark("bench")
-                # TWO passes, min: a single fresh-session pass is COLD
-                # (first compile of the whole plan in a new JVM) while
-                # the prior-round number it "confirms" was a WARM
-                # record — r10's curation_url_funnel repass recorded
-                # 7.74 s cold against a 2.64 s warm prior, stamping a
-                # regression that measured 3.0 s warm-isolated (r11
-                # investigation). Cold pass 1 warms; pass 2 is the
-                # like-for-like observation.
-                _measured_pass()
-                _cleanup()
-                _measured_pass()
-                rec["repass_fresh_session"] = min(passes[-2:])
-                if rec["repass_fresh_session"] < timings[name]:
-                    timings[name] = rec["repass_fresh_session"]
-                    rec["timing"] = "repass_fresh_session"
-            rec["passes"] = passes
-            rec["pass_loads"] = pass_loads
-            rec["pass_iowait"] = pass_iowait
-            rec["pass_steal"] = pass_steal
-            if pass_gc_ms:
-                rec["pass_gc_ms"] = pass_gc_ms
-                rec["pass_jit_ms"] = pass_jit_ms
-            # contended = the pass whose time became the record STARTED
-            # above the gate (feeds the headline contended_queries count)
-            rec["contended"] = pass_hot[passes.index(timings[name])]
-            # block-manager storage state BEFORE this query's cleanup:
-            # what the query just ran on top of (ask #1 telemetry)
-            rec.update(_storage_telemetry(spark))
-            detail[name] = rec
-        except Exception as e:  # noqa: BLE001 - one bad query must not kill BENCH
+            detail[name] = measure(spark, spec.fn, sf_dir)
+            timings[name] = detail[name]["median"]
+        except Exception as e:  # noqa: BLE001 - one bad query must not kill the line
             failures.append(name)
             print(f"# bench FAILURE {name}: {e}", file=sys.stderr)
-        _cleanup()
-        # cadence keyed off EXECUTED queries (not the raw enumerate
-        # index, which advances on skipped queries too)
+        _cleanup(spark)
+        spark.sparkContext._jvm.System.gc()
         n_done = len(timings) + len(failures)
-        if n_done % gc_every == 0:
-            spark.sparkContext._jvm.System.gc()
-        if n_done % 20 == 0:
-            _dump_detail(sf, timings, detail, failures, merge=bool(only))
-            # cumulative parseable headline: if an external wall
-            # timeout kills the run, the driver's "last JSON line"
-            # parse still gets a partial-but-valid result instead of
-            # nothing (the round-1 failure mode)
-            print(
-                json.dumps(
-                    {
-                        "metric": "declared_query_suite_wall",
-                        "value": round(sum(timings.values()), 3),
-                        "unit": "sec",
-                        "sf": sf,
-                        "n_queries": len(timings),
-                        "partial": True,
-                        **_host_load(),
-                        "queries": dict(
-                            sorted(timings.items(), key=lambda kv: -kv[1])[:3]
-                        ),
-                    }
-                ),
-                flush=True,
-            )
-        # Accumulated plans/codegen classes in one long-lived JVM
-        # degrade the suite tail (one 294-query run timed 402 s where
-        # the same queries isolated sum to far less; another blew past
-        # 590 s) — a periodic clean session bounds that drift.
-        if restart_every and n_done % restart_every == 0:
+        if n_done % PARTIAL_EVERY == 0:
+            # a run killed by an outer timeout still leaves a parseable
+            # last line and a usable detail file
+            part = {**head, "value": round(sum(timings.values()), 3),
+                    "n_queries": len(timings), "partial": True}
+            top3 = sorted(timings.items(), key=lambda kv: -kv[1])[:3]
+            print(json.dumps({**part, **_host_load(), "queries": dict(top3)}),
+                  flush=True)
+            _dump_detail(names, {**part, "timing": TIMING, "queries": timings,
+                                 "detail": detail, "failures": failures})
+        if n_done % RESTART_EVERY == 0:
             spark.stop()
-            spark = get_spark("bench")
+            spark = new_session(specs, sf_dir)
 
-    # POST-SUITE RETRY QUEUE (r9 verdict ask #1: 17 records were
-    # stamped contended=True because the host stayed above the load
-    # gate for a stretch of the suite — a noisy host PATCH should not
-    # stamp a round). After the full pass, every record whose decisive
-    # pass started above the gate gets ONE more chance on the
-    # then-current load: fresh session, clean cache, record the MIN.
-    # If the retry also runs contended the original record stands (the
-    # host really is busy — documented irreducible noise), and the
-    # headline's contended_queries counts only records still contended
-    # AFTER the queue drained.
-    retry_q = [n for n, r in detail.items() if r.get("contended")]
-    if retry_q:
-        for name in retry_q:
-            # fresh session PER RETRIED RECORD, matching the documented
-            # contract (r10 ADVICE: one session recreated before the
-            # whole queue meant every retry after the first ran in a
-            # shared warmed session)
-            spark.stop()
-            spark = get_spark("bench")
-            spec = specs[name]
-            rec = detail[name]
-            # two passes, min: like the fresh-session repass, a single
-            # pass in a just-started session is cold-compile-biased
-            # against the warm in-suite records it competes with
-            took = None
-            for retry_i in range(2):
-                load, hot = _gate_load()
-                io0 = _proc_stat()
-                j0 = _jvm_counters(spark)
-                t0 = time.time()
-                try:
-                    if name in os.environ.get(
-                        "SPARK_GRAFT_BENCH_RETRY_FAIL", ""
-                    ).split(",") or (
-                        retry_i == 1
-                        # test/demo hook: fail ONLY the second retry
-                        # pass (r11 ADVICE — a pass-2 failure must not
-                        # void a valid pass-1 timing)
-                        and name
-                        in os.environ.get(
-                            "SPARK_GRAFT_BENCH_RETRY_FAIL_PASS2", ""
-                        ).split(",")
-                    ):
-                        # test/demo hook (tests/test_bench_policy.py):
-                        # the throwing-retry bookkeeping path without
-                        # needing a genuinely-crashing query
-                        raise RuntimeError("injected retry failure")
-                    _test_sleep(name)
-                    force(spec.fn(spark, sf_dir))
-                except Exception as e:  # noqa: BLE001 - retry must not kill bench
-                    # the failure lands IN the detail record (r10
-                    # ADVICE: stderr-only swallowed the skipped hygiene
-                    # pass); a pass-2 failure does NOT void a valid
-                    # pass-1 timing (r11 ADVICE: the old 'failed' flag
-                    # discarded a usable quiet measurement)
-                    rec["retry_error"] = f"{type(e).__name__}: {e}"[:300]
-                    print(
-                        f"# bench retry FAILURE {name}: {e}",
-                        file=sys.stderr,
-                    )
-                    break
-                one = round(time.time() - t0, 3)
-                io1 = _proc_stat()
-                j1 = _jvm_counters(spark)
-                rec.setdefault("retry_passes", []).append(one)
-                rec.setdefault("retry_loads", []).append(load)
-                if io0 and io1 and io1[1] > io0[1]:
-                    win = io1[1] - io0[1]
-                    rec.setdefault("retry_iowait", []).append(
-                        round((io1[0] - io0[0]) / win, 4)
-                    )
-                    rec.setdefault("retry_steal", []).append(
-                        round((io1[2] - io0[2]) / win, 4)
-                    )
-                if j0 and j1:
-                    rec.setdefault("retry_gc_ms", []).append(j1[0] - j0[0])
-                    rec.setdefault("retry_jit_ms", []).append(j1[1] - j0[1])
-                if took is None or one < took:
-                    took, best_hot = one, hot
-                _cleanup()
-            if took is None:
-                # no retry pass succeeded: keep the original record and
-                # the contended flag (retry_error documents why)
-                continue
-            hot = best_hot  # the pass that produced the candidate record
-            if took < timings[name]:
-                timings[name] = took
-                rec["timing"] = "retry_quiet" if not hot else "retry_min"
-                rec["contended"] = hot
-            elif not hot:
-                # quiet retry CONFIRMED the original number — it was
-                # not contention-inflated after all; clear the flag so
-                # the headline counts only genuinely-dubious records
-                rec["contended"] = False
-                rec["retry_confirmed"] = True
-            _cleanup()
-
-    # A/B canary, suite-end leg — fresh session so both legs measure
-    # the same thing (a just-started session running the pinned subset)
     if not only:
-        spark.stop()
-        spark = get_spark("bench")
-        canary.append(_run_canary(spark, specs, sf_dir, "suite_end"))
-
-    # REGRESSED-VS-PRIOR headline surface (r10 verdict ask #4): a
-    # sustained regression — fresh-session-CONFIRMED, >= 2x the prior
-    # round, not contention-stamped — must not ship silently in the
-    # detail file; it is named in the headline so the round report has
-    # to address it. (curation_url_funnel's r10 3x rode in unannounced
-    # exactly this way.)
-    regressed = sorted(
-        n
-        for n, r in detail.items()
-        if "repass_fresh_session" in r
-        and not r.get("contended")
-        and r.get("prior_sec")
-        and timings.get(n, 0.0) >= 2.0 * r["prior_sec"]
-    )
-
-    extra: dict = {}
-    if canary:
-        extra["canary"] = canary
-    if regressed:
-        extra["regressed_vs_prior"] = regressed
-
-    total = round(sum(timings.values()), 3)
-    _dump_detail(sf, timings, detail, failures, merge=bool(only), extra=extra)
-    # r12 verdict ask #2: the final line used to carry only the top-5
-    # slowest queries, so the driver's round-over-round PERF compared
-    # 3 queries and produced a verdict-flipping 0.711 geomean for a
-    # round whose 607-query geomean was 1.055. The final line now
-    # carries the COMPLETE per-query map (slowest-first, so a
-    # truncated capture still keeps the headline fields and heaviest
-    # queries — the r12 capture kept a 15 KB per_query_map line
-    # intact, so a ~19 KB line is within proven capture capacity).
-    slowest = dict(sorted(timings.items(), key=lambda kv: -kv[1]))
-    ts = sorted(timings.values())
-    dist = (
-        {
-            "q_median": round(ts[len(ts) // 2], 3),
-            "q_p90": round(ts[int(len(ts) * 0.9)], 3),
-        }
-        if ts
-        else {}
-    )
-    # r5 ask #8 retry: emit the FULL per-query map as a PENULTIMATE
-    # line. The driver parses the LAST JSON line (proven by the
-    # partial-headline cadence above riding earlier lines all round),
-    # so the short headline below stays the parsed record even if this
-    # long line is truncated by the tail capture; if the capture keeps
-    # raw stdout, the judge gets the full map in BENCH_r{n} without a
-    # detail-file hop.
-    print(
-        json.dumps(
-            {
-                "metric": "per_query_map",
-                "sf": sf,
-                "n_queries": len(timings),
-                "queries": {k: round(v, 2) for k, v in timings.items()},
-            }
-        ),
-        flush=True,
-    )
-    # the headline fields come FIRST so a capture that truncates the
-    # tail of the line still shows the totals; the detail file named
-    # below remains the canonical full-fidelity artifact
-    print(
-        json.dumps(
-            {
-                "metric": "declared_query_suite_wall",
-                "value": total,
-                "unit": "sec",
-                "sf": sf,
-                "n_queries": len(timings),
-                "timing": "pass2_warm_if_slow",
-                # r7 verdict ask #1c: how many records were taken above
-                # the load gate — nonzero means the suite number carries
-                # host contention, not plan changes
-                "contended_queries": sum(
-                    1 for r in detail.values() if r.get("contended")
-                ),
-                # r9: how many records took the fresh-session escape
-                # hatch (anomaly vs prior round on a quiet host)
-                "repassed_fresh": sum(
-                    1
-                    for r in detail.values()
-                    if "repass_fresh_session" in r
-                ),
-                # r10 ask #3: pinned-subset ratios vs the r8 records —
-                # ~1.0 means the host matches the r8 window (suite
-                # drift would be engine-side); inflated means host
-                **(
-                    {
-                        "canary_vs_r8": [
-                            c.get("ratio_vs_r8") for c in canary
-                        ]
-                    }
-                    if canary
-                    else {}
-                ),
-                # r10 ask #4: fresh-session-confirmed >= 2x-prior
-                # regressions may not ship unannounced
-                **(
-                    {"regressed_vs_prior": regressed} if regressed else {}
-                ),
-                **dist,
-                "detail": (
-                    f"BENCH_DETAIL_r{_round_stamp():02d}"
-                    f"{_detail_suffix()}.json"
-                ),
-                **_host_load(),
-                "queries": slowest,
-                **({"n_failures": len(failures)} if failures else {}),
-            }
+        canary["end"] = run_canary(spark, specs, sf_dir)
+        start = canary["start"]["total_sec"]
+        canary["end_vs_start"] = (
+            round(canary["end"]["total_sec"] / start, 3) if start else None
         )
-    )
+    steal = _share(stat0, _proc_stat(), 2)
+    total = round(sum(timings.values()), 3)
+    ts = sorted(timings.values())
+    summary = {
+        **head,
+        "value": total,
+        "n_queries": len(timings),
+        "timing": TIMING,
+        "q_median": round(ts[len(ts) // 2], 3) if ts else None,
+        "q_p90": round(ts[int(len(ts) * 0.9)], 3) if ts else None,
+        **({"canary_end_vs_start": canary["end_vs_start"]} if canary else {}),
+        "steal": steal,
+        "wall_s": round(time.time() - t_start, 1),
+    }
+    _dump_detail(names, {**summary, "passes_fast": PASSES_FAST,
+                         "passes_slow": PASSES_SLOW, "slow_sec": SLOW_SEC,
+                         "queries": timings, "detail": detail,
+                         "failures": failures,
+                         **({"canary": canary} if canary else {})})
+    print(json.dumps({
+        **summary,
+        "detail": names[0],
+        **_host_load(),
+        "n_failures": len(failures),
+        "queries": dict(sorted(timings.items(), key=lambda kv: -kv[1])),
+    }))
 
 
 if __name__ == "__main__":

@@ -111,21 +111,23 @@ def run_medallion(
         raise ValueError("landing_json required when no archive is given")
 
     # landing → processing (R3-R5): schema-inferred JSON → parquet.
-    # The R4 row-count check rides the write pass as an Observation —
-    # at 100 TB a separate .count() action is a second full scan of
-    # the landing zone; observe() computes the metric on the same
-    # pass for free.
+    # R4 gate: a landing with no records (an empty file, or only `{}`
+    # lines) infers no columns, and a record-bearing one always infers
+    # some, so the inferred schema decides emptiness without a job.
+    # The row count rides the write pass as an Observation — at 100 TB
+    # a separate .count() action is a second full scan of the landing
+    # zone; observe() computes it on the same pass for free.
     from pyspark.sql import Observation
     from pyspark.sql import functions as F
 
     raw = io.read_json(spark, landing_json)
+    if not raw.columns:
+        raise ValueError("quality gate: landing zone is empty")
     gate = Observation("landing_gate")
     raw = raw.observe(gate, F.count(F.lit(1)).alias("n"))
     processing_path = f"{workdir}/processing"
     io.write_parquet(raw, processing_path)
     landing_count = gate.get["n"]
-    if landing_count == 0:
-        raise ValueError("quality gate: landing zone is empty")
     stages.append("landing->processing(parquet+observed gate)")
 
     # processing → curated (R6-R13): view + SQL + avro (fallback parquet).

@@ -3,7 +3,6 @@ from __future__ import annotations
 import sys
 from pathlib import Path
 
-import duckdb
 import pytest
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
@@ -12,7 +11,7 @@ from gcp_etl_spark.session import (  # noqa: E402
     _quiet_benign_warnings,
     get_spark,
 )
-from gcp_etl_spark.tables import TABLES  # noqa: E402
+from tools.verify_local import duck_connection  # noqa: E402
 
 SF_SMALL = "/root/testdata/sf0.001"
 
@@ -29,14 +28,7 @@ def spark():
 
 @pytest.fixture(scope="session")
 def duck():
-    con = duckdb.connect()
-    con.execute("SET TimeZone='UTC'")
-    for name in TABLES:
-        con.execute(
-            f"CREATE VIEW {name} AS "
-            f"SELECT * FROM read_parquet('{SF_SMALL}/{name}.parquet')"
-        )
-    yield con
+    return duck_connection(SF_SMALL)
 
 
 def jobs_started(spark, fn, group: str) -> int:

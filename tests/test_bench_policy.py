@@ -1,411 +1,134 @@
-"""Bench-harness policy regressions (r8 verdict asks #1/#2).
+"""bench.py's measurement regime and final-line contract.
 
-These run bench.py as a SUBPROCESS at sf0.001 with a single cheap
-query, an injected prior-round baseline, and a temp output dir, so the
-policy rules are demonstrated end-to-end without touching the repo's
-round artifacts.
+Two tests run bench.py as a subprocess at sf0.001 on a query subset
+with a temp output dir, so the repo's round artifacts are never
+touched; the other checks are plain function calls that start no JVM.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import re
 import subprocess
 import sys
 
+from tests.conftest import SF_SMALL
+
 HERE = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+BENCH = os.path.join(HERE, "bench.py")
+
+CONTRACT = {
+    "metric", "value", "unit", "sf", "n_queries", "timing", "q_median",
+    "q_p90", "detail", "load1", "procs", "queries", "n_failures", "steal",
+}
 
 
-def _run_bench(tmp_path, prior_sec: float, query: str = "ref_select_limit"):
-    prior = {"sf": 0.001, "queries": {query: prior_sec}}
-    prior_file = tmp_path / "prior.json"
-    prior_file.write_text(json.dumps(prior))
-    env = dict(
-        os.environ,
-        SPARK_GRAFT_SF_DIR="/root/testdata/sf0.001",
-        SPARK_GRAFT_BENCH_ONLY=query,
-        SPARK_GRAFT_BENCH_PRIOR_FILE=str(prior_file),
-        SPARK_GRAFT_BENCH_OUT_DIR=str(tmp_path),
-        SPARK_GRAFT_ROUND="77",
-        SPARK_GRAFT_BENCH_MIN2="0",       # isolate the fresh-session rule
-        SPARK_GRAFT_BENCH_LOAD_GATE="64",  # never gate on this host
-        SPARK_GRAFT_CPUS="8",
-    )
-    out = subprocess.run(
-        [sys.executable, os.path.join(HERE, "bench.py")],
-        env=env,
-        capture_output=True,
-        text=True,
-        timeout=600,
-        cwd=HERE,
-    )
-    assert out.returncode == 0, out.stderr[-2000:]
-    detail = json.loads((tmp_path / "BENCH_DETAIL_r77_c8.json").read_text())
-    return detail["detail"][query]
+def test_bench_reads_only_the_kept_env_names():
+    """Knobs may not grow back: these six are the whole env surface."""
+    with open(BENCH) as f:
+        names = set(re.findall(r"SPARK_GRAFT_[A-Z0-9_]+", f.read()))
+    assert names == {
+        "SPARK_GRAFT_SF_DIR",
+        "SPARK_GRAFT_CPUS",
+        "SPARK_GRAFT_BENCH_ONLY",
+        "SPARK_GRAFT_BENCH_OUT_DIR",
+        "SPARK_GRAFT_ROUND",
+        "SPARK_GRAFT_QUIET_BENIGN",
+    }
 
 
-def test_fresh_session_repass_fires_on_injected_anomaly(tmp_path):
-    """An absurdly small injected prior (1 ms) makes ANY record >= 3x
-    prior on a quiet host — the rule must restart the session, re-run,
-    and stamp ``repass_fresh_session`` provenance (r8 blind spot: the
-    load gate caught host contention but not session-state pollution,
-    so agg_weighted_median's 20.35 s polluted record had no escape)."""
-    rec = _run_bench(tmp_path, prior_sec=0.001)
-    assert "repass_fresh_session" in rec, rec
-    assert rec["prior_sec"] == 0.001
-    assert len(rec["passes"]) >= 2  # original + fresh-session pass
-    # telemetry rides every record (ask #1)
-    assert "pass_iowait" in rec and len(rec["pass_iowait"]) == len(
-        rec["passes"]
-    )
-
-
-def test_fresh_session_repass_quiet_on_normal_prior(tmp_path):
-    """A generous prior (120 s) means no anomaly: exactly one pass, no
-    fresh-session provenance — the rule must not add a systematic
-    second pass to every query."""
-    rec = _run_bench(tmp_path, prior_sec=120.0)
-    assert "repass_fresh_session" not in rec, rec
-    assert len(rec["passes"]) == 1
-
-
-def test_contended_record_enters_retry_queue(tmp_path):
-    """r9 verdict ask #1: a record whose decisive pass started above
-    the load gate must get a post-suite retry in a fresh session. The
-    load schedule injects one loud sample (10.0 > gate 4.0) for the
-    measured pass; the retry pops an explicitly-quiet sample (0.5), so
-    either the retry beats the original (timing=retry_quiet) or it
-    confirms it (retry_confirmed) — in BOTH cases the record must no
-    longer count as contended and the raw retry pass must be in the
-    detail file."""
-    query = "ref_select_limit"
-    sched = tmp_path / "loads.json"
-    sched.write_text(json.dumps([10.0, 0.5, 0.5]))
-    env = dict(
-        os.environ,
-        SPARK_GRAFT_SF_DIR="/root/testdata/sf0.001",
-        SPARK_GRAFT_BENCH_ONLY=query,
-        SPARK_GRAFT_BENCH_OUT_DIR=str(tmp_path),
-        SPARK_GRAFT_ROUND="78",
-        SPARK_GRAFT_BENCH_MIN2="0",
-        SPARK_GRAFT_BENCH_LOAD_GATE="4.0",
-        SPARK_GRAFT_BENCH_LOAD_SCHEDULE=str(sched),
-        SPARK_GRAFT_CPUS="8",
-    )
-    env.pop("SPARK_GRAFT_BENCH_PRIOR_FILE", None)
-    out = subprocess.run(
-        [sys.executable, os.path.join(HERE, "bench.py")],
-        env=env,
-        capture_output=True,
-        text=True,
-        timeout=600,
-        cwd=HERE,
-    )
-    assert out.returncode == 0, out.stderr[-2000:]
-    detail = json.loads((tmp_path / "BENCH_DETAIL_r78_c8.json").read_text())
-    rec = detail["detail"][query]
-    assert rec["pass_loads"][0] == 10.0  # the injected loud pass
-    # two retry passes (cold warms, min is the like-for-like record)
-    assert "retry_passes" in rec and len(rec["retry_passes"]) == 2
-    assert rec["retry_loads"] == [0.5, 0.5]
-    assert rec["contended"] is False, rec
-    assert rec["timing"] == "retry_quiet" or rec.get("retry_confirmed")
-    head = json.loads(out.stdout.strip().splitlines()[-1])
-    assert head["contended_queries"] == 0
-
-
-def test_sustained_regression_lands_in_headline(tmp_path):
-    """r10 verdict ask #4: a fresh-session-CONFIRMED record >= 2x its
-    prior on a quiet host must be named in ``regressed_vs_prior`` in
-    the detail payload (and the headline carries the same list) — a
-    sustained regression cannot ship silently. The 1 ms injected prior
-    makes any record both >= 3x (fresh-session re-pass fires) and
-    >= 2x after the re-pass (regression confirmed)."""
-    query = "ref_select_limit"
-    prior = {"sf": 0.001, "queries": {query: 0.001}}
-    prior_file = tmp_path / "prior.json"
-    prior_file.write_text(json.dumps(prior))
-    env = dict(
-        os.environ,
-        SPARK_GRAFT_SF_DIR="/root/testdata/sf0.001",
-        SPARK_GRAFT_BENCH_ONLY=query,
-        SPARK_GRAFT_BENCH_PRIOR_FILE=str(prior_file),
-        SPARK_GRAFT_BENCH_OUT_DIR=str(tmp_path),
-        SPARK_GRAFT_ROUND="79",
-        SPARK_GRAFT_BENCH_MIN2="0",
-        SPARK_GRAFT_BENCH_LOAD_GATE="64",
-        SPARK_GRAFT_CPUS="8",
-    )
-    out = subprocess.run(
-        [sys.executable, os.path.join(HERE, "bench.py")],
-        env=env,
-        capture_output=True,
-        text=True,
-        timeout=600,
-        cwd=HERE,
-    )
-    assert out.returncode == 0, out.stderr[-2000:]
-    detail = json.loads((tmp_path / "BENCH_DETAIL_r79_c8.json").read_text())
-    assert detail.get("regressed_vs_prior") == [query], detail.get(
-        "regressed_vs_prior"
-    )
-    headline = json.loads(
-        [ln for ln in out.stdout.splitlines() if ln.startswith("{")][-1]
-    )
-    assert headline.get("regressed_vs_prior") == [query]
-
-
-def test_fresh_session_gate_covers_two_to_three_x_window(tmp_path):
-    """r11 verdict ask #3: the fresh-session confirmation gate used to
-    fire only at >= 3x prior, so a quiet 2.0-3.0x regression was never
-    confirmed and could never reach ``regressed_vs_prior`` (whose own
-    threshold is 2.0x) — dedup_survivorship shipped a 2.07x drift
-    unflagged that way in r11. Pin the record INSIDE that old blind
-    window deterministically (4 s injected sleep dominates the cheap
-    query; prior 1.9 s => ratio ~2.2x) and require both the
-    fresh-session confirmation and the headline listing."""
-    query = "ref_select_limit"
-    prior = {"sf": 0.001, "queries": {query: 1.9}}
-    prior_file = tmp_path / "prior.json"
-    prior_file.write_text(json.dumps(prior))
-    env = dict(
-        os.environ,
-        SPARK_GRAFT_SF_DIR="/root/testdata/sf0.001",
-        SPARK_GRAFT_BENCH_ONLY=query,
-        SPARK_GRAFT_BENCH_PRIOR_FILE=str(prior_file),
-        SPARK_GRAFT_BENCH_OUT_DIR=str(tmp_path),
-        SPARK_GRAFT_ROUND="81",
-        SPARK_GRAFT_BENCH_MIN2="0",
-        SPARK_GRAFT_BENCH_LOAD_GATE="64",
-        SPARK_GRAFT_BENCH_SLEEP=f"{query}:4.0",
-        SPARK_GRAFT_CPUS="8",
-    )
-    out = subprocess.run(
-        [sys.executable, os.path.join(HERE, "bench.py")],
-        env=env,
-        capture_output=True,
-        text=True,
-        timeout=600,
-        cwd=HERE,
-    )
-    assert out.returncode == 0, out.stderr[-2000:]
-    detail = json.loads((tmp_path / "BENCH_DETAIL_r81_c8.json").read_text())
-    rec = detail["detail"][query]
-    ratio = detail["queries"][query] / 1.9
-    # the injected sleep pins the record below the OLD 3.0x quiet gate
-    # (which would have ignored it) and at/above the new 2.0x one
-    assert 2.0 <= ratio < 3.0, ratio
-    assert "repass_fresh_session" in rec, rec
-    assert detail.get("regressed_vs_prior") == [query], detail.get(
-        "regressed_vs_prior"
-    )
-    headline = json.loads(
-        [ln for ln in out.stdout.splitlines() if ln.startswith("{")][-1]
-    )
-    assert headline.get("regressed_vs_prior") == [query]
-    # ask #2 telemetry: per-pass GC/JIT deltas ride every record
-    assert "pass_gc_ms" in rec and len(rec["pass_gc_ms"]) == len(
-        rec["passes"]
-    )
-    assert "pass_jit_ms" in rec
-
-
-def test_retry_pass1_kept_when_pass2_fails(tmp_path):
-    """r11 ADVICE: in the retry queue, a pass-2 exception must not void
-    a valid pass-1 timing — the old 'failed' flag discarded a usable
-    quiet measurement and left the record contended. The measured pass
-    is stamped contended (10.0 > gate), retry pass 1 succeeds quiet
-    (0.5), and the PASS2-only failure hook throws on pass 2: the
-    record must end uncontended with the pass-1 timing in play and the
-    failure still documented in retry_error."""
-    query = "ref_select_limit"
-    sched = tmp_path / "loads.json"
-    sched.write_text(json.dumps([10.0, 0.5, 0.5]))
-    env = dict(
-        os.environ,
-        SPARK_GRAFT_SF_DIR="/root/testdata/sf0.001",
-        SPARK_GRAFT_BENCH_ONLY=query,
-        SPARK_GRAFT_BENCH_OUT_DIR=str(tmp_path),
-        SPARK_GRAFT_ROUND="82",
-        SPARK_GRAFT_BENCH_MIN2="0",
-        SPARK_GRAFT_BENCH_LOAD_GATE="4.0",
-        SPARK_GRAFT_BENCH_LOAD_SCHEDULE=str(sched),
-        SPARK_GRAFT_BENCH_RETRY_FAIL_PASS2=query,
-        SPARK_GRAFT_CPUS="8",
-    )
-    env.pop("SPARK_GRAFT_BENCH_PRIOR_FILE", None)
-    out = subprocess.run(
-        [sys.executable, os.path.join(HERE, "bench.py")],
-        env=env,
-        capture_output=True,
-        text=True,
-        timeout=600,
-        cwd=HERE,
-    )
-    assert out.returncode == 0, out.stderr[-2000:]
-    detail = json.loads((tmp_path / "BENCH_DETAIL_r82_c8.json").read_text())
-    rec = detail["detail"][query]
-    assert rec["retry_error"].startswith("RuntimeError"), rec
-    assert len(rec["retry_passes"]) == 1  # pass-1 timing survived
-    assert rec["contended"] is False, rec
-    assert rec["timing"] == "retry_quiet" or rec.get("retry_confirmed")
-
-
-def test_retry_failure_recorded_in_detail(tmp_path):
-    """r10 ADVICE: a retry that throws must land in the detail record
-    (``retry_error``) with the contended flag LEFT STANDING (an
-    explicitly-failed retry, not a silently-skipped hygiene pass).
-    The load schedule stamps the measured pass contended (10.0 > gate)
-    and SPARK_GRAFT_BENCH_RETRY_FAIL makes the retry throw."""
-    query = "ref_select_limit"
-    sched = tmp_path / "loads.json"
-    sched.write_text(json.dumps([10.0]))
-    env = dict(
-        os.environ,
-        SPARK_GRAFT_SF_DIR="/root/testdata/sf0.001",
-        SPARK_GRAFT_BENCH_ONLY=query,
-        SPARK_GRAFT_BENCH_OUT_DIR=str(tmp_path),
-        SPARK_GRAFT_ROUND="80",
-        SPARK_GRAFT_BENCH_MIN2="0",
-        SPARK_GRAFT_BENCH_LOAD_GATE="4.0",
-        SPARK_GRAFT_BENCH_LOAD_SCHEDULE=str(sched),
-        SPARK_GRAFT_BENCH_RETRY_FAIL=query,
-        SPARK_GRAFT_CPUS="8",
-    )
-    env.pop("SPARK_GRAFT_BENCH_PRIOR_FILE", None)
-    out = subprocess.run(
-        [sys.executable, os.path.join(HERE, "bench.py")],
-        env=env,
-        capture_output=True,
-        text=True,
-        timeout=600,
-        cwd=HERE,
-    )
-    assert out.returncode == 0, out.stderr[-2000:]
-    detail = json.loads((tmp_path / "BENCH_DETAIL_r80_c8.json").read_text())
-    rec = detail["detail"][query]
-    assert rec["retry_error"].startswith("RuntimeError"), rec
-    assert rec["contended"] is True, rec
-    headline = json.loads(
-        [ln for ln in out.stdout.splitlines() if ln.startswith("{")][-1]
-    )
-    assert headline["contended_queries"] == 1
-
-
-def test_canary_block_schema(spark):
-    """The A/B canary helper (r10 verdict ask #3) returns a block with
-    the pinned-r8 comparison fields; run here over two real canary
-    members at sf0.001 so the schema and the ratio arithmetic are
-    pinned without a full-corpus bench run."""
+def test_canary_block_schema(monkeypatch):
+    """The canary is ten declared queries, measured by the suite's own
+    per-query function; its block totals their medians, and a canary
+    query that raises is dropped without ending the run."""
     import bench as B
     from gcp_etl_spark.queries import load_all
 
-    sub = {
-        k: B.CANARY_R8[k]
-        for k in ("q13_customer_distribution", "subq_in")
-    }
-    orig = B.CANARY_R8
-    B.CANARY_R8 = sub
-    try:
-        block = B._run_canary(
-            spark, load_all(), "/root/testdata/sf0.001", "suite_start"
-        )
-    finally:
-        B.CANARY_R8 = orig
-    assert block["label"] == "suite_start"
-    assert set(block["queries"]) == set(sub)
-    assert block["r8_pinned_sec"] == round(sum(sub.values()), 3)
-    assert block["ratio_vs_r8"] == round(
-        block["total_sec"] / block["r8_pinned_sec"], 3
-    )
+    specs = load_all()
+    assert len(set(B.CANARY)) == 10
+    assert all(name in specs for name in (*B.CANARY, B.SESSION_WARMUP))
+
+    def fake_measure(spark, fn, sf_dir):
+        if fn is specs[B.CANARY[0]].fn:
+            raise RuntimeError("boom")
+        return {"median": 0.5}
+
+    monkeypatch.setattr(B, "measure", fake_measure)
+    block = B.run_canary(None, specs, "unused")
+    assert list(block["queries"]) == list(B.CANARY[1:])
+    assert block["total_sec"] == 4.5
 
 
-def test_subset_merge_preserves_extra_blocks(tmp_path):
-    """r12 post-round find: a SPARK_GRAFT_BENCH_ONLY top-up rebuilt
-    the detail payload without the full run's top-level extra blocks,
-    silently dropping the suite's canary legs from the round artifact.
-    Seed a detail file carrying canary + regressed_vs_prior, run a
-    one-query top-up, and require both blocks to survive the merge
-    (with the top-up's own queries folded in)."""
-    query = "ref_select_limit"
-    seeded = {
-        "metric": "declared_query_suite_wall",
-        "value": 1.0,
-        "unit": "sec",
-        "sf": 0.001,
-        "timing": "pass2_warm_if_slow",
-        "queries": {"some_other_query": 1.0},
-        "detail": {"some_other_query": {"passes": [1.0]}},
-        "failures": [],
-        "canary": [{"label": "suite_start", "ratio_vs_r8": 1.23}],
-        "regressed_vs_prior": ["some_other_query"],
-    }
-    (tmp_path / "BENCH_DETAIL_r83_c8.json").write_text(json.dumps(seeded))
+def test_pass_count_follows_warmup_cost():
+    import bench as B
+
+    assert B.n_passes(0.1) == B.n_passes(B.SLOW_SEC - 0.001) == 3
+    assert B.n_passes(B.SLOW_SEC) == B.n_passes(60.0) == 1
+
+
+def _run_bench(tmp_path, queries: list[str], sf_dir: str):
     env = dict(
         os.environ,
-        SPARK_GRAFT_SF_DIR="/root/testdata/sf0.001",
-        SPARK_GRAFT_BENCH_ONLY=query,
-        SPARK_GRAFT_BENCH_OUT_DIR=str(tmp_path),
-        SPARK_GRAFT_ROUND="83",
-        SPARK_GRAFT_BENCH_MIN2="0",
-        SPARK_GRAFT_BENCH_LOAD_GATE="64",
-        SPARK_GRAFT_CPUS="8",
-    )
-    env.pop("SPARK_GRAFT_BENCH_PRIOR_FILE", None)
-    out = subprocess.run(
-        [sys.executable, os.path.join(HERE, "bench.py")],
-        env=env,
-        capture_output=True,
-        text=True,
-        timeout=600,
-        cwd=HERE,
-    )
-    assert out.returncode == 0, out.stderr[-2000:]
-    detail = json.loads((tmp_path / "BENCH_DETAIL_r83_c8.json").read_text())
-    assert detail["canary"] == seeded["canary"], detail.get("canary")
-    assert detail["regressed_vs_prior"] == ["some_other_query"]
-    assert query in detail["queries"]
-    assert "some_other_query" in detail["queries"]
-
-
-def test_final_headline_full_map_and_cpu_suffixed_detail(tmp_path):
-    """r12 verdict asks #2/#7. (a) The FINAL JSON line must carry the
-    COMPLETE per-query map — the old top-5-only map made the driver's
-    round-over-round PERF comparison cover 3 of 607 common queries and
-    produced a verdict-flipping 0.711 geomean for a 1.055x round. (b)
-    A run at a non-default core count must stamp ``_c{cpus}`` into the
-    detail filename — the r12 8-core scaling run wrote its detail to
-    ``BENCH_DETAIL_r13.json``, a name a real r13 run would clobber."""
-    queries = ["ref_select_limit", "q13_customer_distribution"]
-    env = dict(
-        os.environ,
-        SPARK_GRAFT_SF_DIR="/root/testdata/sf0.001",
+        SPARK_GRAFT_SF_DIR=sf_dir,
         SPARK_GRAFT_BENCH_ONLY=",".join(queries),
         SPARK_GRAFT_BENCH_OUT_DIR=str(tmp_path),
         SPARK_GRAFT_ROUND="84",
-        SPARK_GRAFT_BENCH_MIN2="0",
-        SPARK_GRAFT_BENCH_LOAD_GATE="64",
         SPARK_GRAFT_CPUS="8",
     )
-    env.pop("SPARK_GRAFT_BENCH_PRIOR_FILE", None)
     out = subprocess.run(
-        [sys.executable, os.path.join(HERE, "bench.py")],
-        env=env,
-        capture_output=True,
-        text=True,
-        timeout=600,
-        cwd=HERE,
+        [sys.executable, BENCH], env=env, capture_output=True, text=True,
+        timeout=600, cwd=HERE,
     )
     assert out.returncode == 0, out.stderr[-2000:]
-    headline = json.loads(out.stdout.strip().splitlines()[-1])
-    # (a) full-fidelity map: every timed query is IN the final line,
-    # slowest-first, and n_queries matches the map size exactly
-    assert set(headline["queries"]) == set(queries), headline["queries"]
-    assert headline["n_queries"] == len(headline["queries"])
-    vals = list(headline["queries"].values())
+    head = json.loads(out.stdout.strip().splitlines()[-1])
+    assert CONTRACT <= set(head), CONTRACT - set(head)
+    assert os.listdir(tmp_path) == ["BENCH_DETAIL.json"]
+    detail = json.loads((tmp_path / "BENCH_DETAIL.json").read_text())
+    return head, detail
+
+
+def test_final_headline_full_map_and_cpu_suffixed_detail(tmp_path, monkeypatch):
+    """The final line carries every timed query, slowest first; each
+    record is the median of k measured passes after one warm-up, with
+    per-pass steal, iowait and JVM counters. Runs at a core count other
+    than 32 name their detail file ``_c{cpus}``; a subset run writes
+    only BENCH_DETAIL.json, never the round-stamped file."""
+    import bench as B
+
+    monkeypatch.setenv("SPARK_GRAFT_ROUND", "84")
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "8")
+    assert B.detail_names(False) == [
+        "BENCH_DETAIL_r84_c8.json", "BENCH_DETAIL.json"]
+    assert B.detail_names(True) == ["BENCH_DETAIL.json"]
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "32")
+    assert B.detail_names(False)[0] == "BENCH_DETAIL_r84.json"
+
+    queries = ["ref_select_limit", "q13_customer_distribution"]
+    head, detail = _run_bench(tmp_path, queries, SF_SMALL)
+    assert set(head["queries"]) == set(queries)
+    assert head["n_queries"] == 2 and head["n_failures"] == 0
+    vals = list(head["queries"].values())
     assert vals == sorted(vals, reverse=True)
-    # (b) the detail pointer and the file on disk both carry _c8; the
-    # default-CPU name is NOT written by a non-default-CPU run
-    assert headline["detail"] == "BENCH_DETAIL_r84_c8.json"
-    assert (tmp_path / "BENCH_DETAIL_r84_c8.json").exists()
-    assert not (tmp_path / "BENCH_DETAIL_r84.json").exists()
+    assert head["timing"] == B.TIMING
+    assert head["detail"] == "BENCH_DETAIL.json"
+    assert "canary_end_vs_start" not in head  # subset runs have no canary
+    for name in queries:
+        rec = detail["detail"][name]
+        k = B.n_passes(rec["warmup"])
+        for key in ("passes", "pass_steal", "pass_iowait", "pass_gc_ms",
+                    "pass_jit_ms"):
+            assert len(rec[key]) == k, (key, rec)
+        assert rec["median"] == sorted(rec["passes"])[k // 2]
+        assert rec["min"] == min(rec["passes"])
+        assert head["queries"][name] == detail["queries"][name] == rec["median"]
+
+
+def test_failing_query_lands_in_failures(tmp_path):
+    """A query that raises is counted, not fatal: the final line still
+    prints, with an empty map."""
+    head, detail = _run_bench(
+        tmp_path, ["ref_select_limit"], str(tmp_path / "sf0.001"))
+    assert head["n_failures"] == 1 and head["queries"] == {}
+    assert head["q_median"] is None
+    assert detail["failures"] == ["ref_select_limit"]

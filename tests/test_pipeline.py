@@ -53,13 +53,17 @@ def test_medallion_pipeline_e2e(spark, tmp_path):
 
 
 def test_medallion_empty_landing_fails_gate(spark, tmp_path):
-    landing = str(tmp_path / "empty.json")
-    with open(landing, "w") as f:
-        f.write("")
-    # schema inference on an empty file fails at read or the gate trips —
-    # either way the pipeline refuses to proceed silently
-    with pytest.raises(Exception):
-        run_medallion(spark, landing, str(tmp_path / "work"))
+    """A landing with no records (an empty file, or only `{}` lines)
+    infers no columns; the R4 gate refuses it before the processing
+    write."""
+    for i, content in enumerate(["", "{}\n{}\n"]):
+        landing = str(tmp_path / f"landing{i}.json")
+        with open(landing, "w") as f:
+            f.write(content)
+        work = tmp_path / f"work{i}"
+        with pytest.raises(ValueError, match="landing zone is empty"):
+            run_medallion(spark, landing, str(work))
+        assert not (work / "processing").exists()
 
 
 def test_json_schema_inference_vs_declared(spark, tmp_path):

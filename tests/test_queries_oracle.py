@@ -1,28 +1,16 @@
 """Differential test: every declared query vs its DuckDB oracle at
-sf0.001 (the same check the driver runs at sf0.01 — SURVEY.md §5.2)."""
+sf0.001, with the same compare ``tools/verify_local.py`` runs at any
+scale (SURVEY.md §5.2)."""
 
 from __future__ import annotations
-
-import math
 
 import pytest
 
 from gcp_etl_spark.queries import load_all
 from tests.conftest import SF_SMALL
+from tools.verify_local import compare
 
 SPECS = load_all()
-
-
-def canon(v):
-    if v is None:
-        return None
-    if isinstance(v, float):
-        return "NaN" if math.isnan(v) else round(v, 9)
-    if isinstance(v, bytes):
-        return v.hex()
-    if hasattr(v, "isoformat"):
-        return v.isoformat()
-    return v
 
 
 @pytest.mark.parametrize("name", sorted(SPECS))
@@ -33,18 +21,4 @@ def test_query_matches_oracle(name, spark, duck):
         # rows-only contract: runs, deterministic row count
         assert sdf.count() >= 0
         return
-    scols = sorted(f.name for f in sdf.schema.fields)
-    srows = sorted(
-        (tuple(canon(row[c]) for c in scols) for row in sdf.collect()),
-        key=str,
-    )
-    res = duck.sql(spec.oracle)
-    ocols = sorted(res.columns)
-    assert scols == ocols, f"schema mismatch: {scols} vs {ocols}"
-    idx = [list(res.columns).index(c) for c in ocols]
-    orows = sorted(
-        (tuple(canon(r[i]) for i in idx) for r in res.fetchall()),
-        key=str,
-    )
-    assert len(srows) == len(orows), f"rowcount {len(srows)} vs {len(orows)}"
-    assert srows == orows
+    assert compare(name, sdf, duck, spec.oracle) == []

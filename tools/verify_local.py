@@ -22,7 +22,7 @@ import traceback
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from gcp_etl_spark.queries import load_all  # noqa: E402
 from gcp_etl_spark.session import get_spark  # noqa: E402
