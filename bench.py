@@ -53,7 +53,7 @@ HERE = os.path.dirname(os.path.abspath(__file__))
 sys.path.insert(0, HERE)
 
 from gcp_etl_spark.queries import load_all  # noqa: E402
-from gcp_etl_spark.session import get_spark  # noqa: E402
+from gcp_etl_spark.session import _quiet_benign_warnings, get_spark  # noqa: E402
 
 TIMING = "warmup_then_median_of_k"
 SLOW_SEC = 2.0  # warm-up time from which a query gets PASSES_SLOW
@@ -163,6 +163,9 @@ def run_canary(spark, specs, sf_dir: str) -> dict:
 
 def new_session(specs, sf_dir: str):
     spark = get_spark("bench")
+    # silence the known-benign WindowExec warnings in bench sessions ONLY;
+    # library sessions keep them (see session._quiet_benign_warnings)
+    _quiet_benign_warnings(spark)
     try:
         force(specs[SESSION_WARMUP].fn(spark, sf_dir))
     except Exception as e:  # noqa: BLE001 - a bad warm-up must not kill the line
@@ -208,9 +211,6 @@ def _dump_detail(names: list[str], payload: dict) -> None:
 
 
 def main() -> None:
-    # silence the known-benign WindowExec warnings in bench sessions ONLY;
-    # library sessions keep them (see session._quiet_benign_warnings)
-    os.environ.setdefault("SPARK_GRAFT_QUIET_BENIGN", "1")
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     m = re.search(r"sf([0-9.]+)", sf_dir)
     sf = float(m.group(1)) if m else -1.0

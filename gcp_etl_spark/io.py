@@ -233,47 +233,11 @@ def read_jdbc(
     return r.load()
 
 
-def compact_parquet(
-    spark: SparkSession, path: str, target_mb: int = 128
-) -> tuple[int, int]:
-    """Small-file compaction: rewrite a parquet directory into
-    ~target_mb-sized files (streaming sinks and per-partition writers
-    leave thousands of KB-files; at 100 TB scan throughput dies on
-    file-open overhead and footer reads). Sizes the output from the
-    CURRENT on-disk bytes, rewrites via coalesce (no shuffle), then
-    atomically swaps directories. Returns (files_before, files_after).
-
-    **POSIX-only**: the double ``os.rename`` swap relies on atomic
-    directory rename, which object stores (S3/GCS — the 100 TB deploy
-    target) do not provide; a crash between the two renames also
-    leaves no readable directory at ``path``. On object stores use
-    the manifest-generation variant (``write_managed`` /
-    ``compact_managed``): data dirs are immutable generations and the
-    only mutation is a single-object manifest write, which IS atomic
-    on every store.
-    """
-    import glob as _glob
-
-    files = [f for f in _glob.glob(f"{path}/*.parquet") if os.path.isfile(f)]
-    total = sum(os.path.getsize(f) for f in files)
-    n_out = max(1, -(-total // (target_mb * 1024 * 1024)))  # ceil
-    tmp = path.rstrip("/") + "__compact_tmp"
-    spark.read.parquet(path).coalesce(int(n_out)).write.mode(
-        "overwrite"
-    ).parquet(tmp)
-    bak = path.rstrip("/") + "__compact_old"
-    os.rename(path, bak)
-    os.rename(tmp, path)
-    shutil.rmtree(bak)
-    after = [f for f in _glob.glob(f"{path}/*.parquet") if os.path.isfile(f)]
-    return len(files), len(after)
-
-
 # ---------------------------------------------------------------------------
 # Manifest-generation managed storage — object-store-safe mutation
 # ---------------------------------------------------------------------------
 # Object stores have no atomic directory rename, so any rewrite scheme
-# built on renames (compact_parquet above) is unsafe there. The classic
+# built on renames is unsafe there. The classic
 # fix (what Delta/Iceberg do at heart): data directories are IMMUTABLE
 # generations (gen-0, gen-1, …) and the only thing ever mutated is a
 # single manifest object naming the active generation — a one-object

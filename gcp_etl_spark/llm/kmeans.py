@@ -100,7 +100,7 @@ def lloyd_distributed(
     — assignment is a broadcast-shaped matmul per Arrow batch, the
     centroid update is ONE map-side-combinable hash agg (64 avg()
     aggregates per centroid, no explode/expand), exactly the logistic
-    GD trainer's legitimate bounded-state shape (queries/r6_ops.py).
+    GD trainer's legitimate bounded-state shape (queries/ml_ops.py).
 
     Determinism contract (same as the GD trainer): every centroid
     coordinate is rounded to ``round_dp`` decimals INSIDE the per-

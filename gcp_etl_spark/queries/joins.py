@@ -575,3 +575,126 @@ def join_range_lookup_broadcast(spark, sf_dir):
         )
         .orderBy("bracket")
     )
+
+
+# ----------------------- as-of join with tolerance (r11 extra)
+_ASOF_TOL_US = 600 * 1_000_000  # 10-minute tolerance, microseconds
+
+
+@query(
+    "join_asof_tolerance",
+    oracle=f"""
+    WITH c AS (
+      SELECT user_id, epoch_us(ts) AS cus FROM events
+      WHERE event_type = 'click'
+    ), v AS (
+      SELECT user_id, epoch_us(ts) AS vus FROM events
+      WHERE event_type = 'view'
+    ), j AS (
+      SELECT c.user_id, c.cus, v.vus
+      FROM c ASOF LEFT JOIN v
+        ON c.user_id = v.user_id AND v.vus <= c.cus
+    )
+    SELECT CAST(count(*) AS BIGINT) AS n_clicks,
+           CAST(count(*) FILTER (vus IS NOT NULL
+                 AND cus - vus <= {_ASOF_TOL_US}) AS BIGINT)
+             AS n_matched,
+           CAST(count(*) FILTER (vus IS NOT NULL
+                 AND cus - vus > {_ASOF_TOL_US}) AS BIGINT)
+             AS n_tolerance_missed,
+           CAST(count(*) FILTER (vus IS NULL) AS BIGINT) AS n_no_prior,
+           round(CAST(sum(cus - vus)
+                      FILTER (vus IS NOT NULL
+                              AND cus - vus <= {_ASOF_TOL_US})
+                      AS DOUBLE)
+                 / count(*) FILTER (vus IS NOT NULL
+                                    AND cus - vus <= {_ASOF_TOL_US})
+                 / 1000000.0, 6) AS avg_gap_s
+    FROM j
+    """,
+    tags=("joins", "asof", "events", "temporal"),
+)
+def join_asof_tolerance(spark, sf_dir):
+    """AS-OF JOIN WITH TOLERANCE (the kdb/pandas ``merge_asof
+    tolerance=`` semantic): each click matches the user's LATEST view
+    at-or-before it, but only counts as attributed when the gap is
+    within 10 minutes — the attribution-window rule every
+    click-attribution pipeline enforces. Reported: matched /
+    tolerance-missed (a prior view exists but is stale) / no-prior
+    counts and the mean attributed gap.
+
+    Spark implementation (no native ASOF): the union-tag pattern —
+    views and clicks interleave in ONE per-user event-time window and
+    ``last_value(view_ts, ignorenulls)`` carries the latest view
+    forward; ties cannot occur (event timestamps are strictly
+    increasing per user in this table). The oracle uses DuckDB's
+    NATIVE ASOF LEFT JOIN — two entirely different algorithms, one
+    hash-verified answer. Gaps are exact epoch-microsecond BIGINTs;
+    the mean divides exact integers (DECIMAL sum), rounded 6dp.
+
+    Scale: one hash shuffle on user_id, one ordered window per user
+    (state = one timestamp), one aggregate — the streaming dual is
+    stream-static enrich. Never a range join, never an explode."""
+    from pyspark.sql import Window as W
+
+    e = t(spark, sf_dir, "events").filter(
+        F.col("event_type").isin("click", "view")
+    )
+    tagged = e.select(
+        "user_id",
+        F.unix_micros(F.col("ts").cast("timestamp")).alias("us"),
+        F.col("event_type").alias("et"),
+        F.when(
+            F.col("event_type") == "view",
+            F.unix_micros(F.col("ts").cast("timestamp")),
+        ).alias("vus"),
+    )
+    # views sort BEFORE clicks at equal timestamps ('click' < 'view'
+    # lexically, so order by et DESC puts view first) — moot here
+    # (per-user timestamps are unique) but pinned for determinism
+    w = (
+        W.partitionBy("user_id")
+        .orderBy(F.col("us"), F.col("et").desc())
+        .rowsBetween(W.unboundedPreceding, W.currentRow)
+    )
+    j = (
+        tagged.select(
+            "user_id",
+            "us",
+            "et",
+            F.last("vus", ignorenulls=True).over(w).alias("last_vus"),
+        )
+        .filter(F.col("et") == "click")
+        .select("us", "last_vus")
+    )
+    matched = F.col("last_vus").isNotNull() & (
+        F.col("us") - F.col("last_vus") <= _ASOF_TOL_US
+    )
+    stale = F.col("last_vus").isNotNull() & (
+        F.col("us") - F.col("last_vus") > _ASOF_TOL_US
+    )
+    return j.agg(
+        F.count("*").cast("long").alias("n_clicks"),
+        F.sum(F.when(matched, 1).otherwise(0))
+        .cast("long")
+        .alias("n_matched"),
+        F.sum(F.when(stale, 1).otherwise(0))
+        .cast("long")
+        .alias("n_tolerance_missed"),
+        F.sum(F.when(F.col("last_vus").isNull(), 1).otherwise(0))
+        .cast("long")
+        .alias("n_no_prior"),
+        F.round(
+            F.sum(
+                F.when(
+                    matched,
+                    (F.col("us") - F.col("last_vus")).cast(
+                        "decimal(38,0)"
+                    ),
+                )
+            ).cast("double")
+            / F.sum(F.when(matched, 1))
+            / 1000000.0,
+            6,
+        ).alias("avg_gap_s"),
+    )

@@ -13,8 +13,11 @@ running sums — no Python in the hot path.
 
 from __future__ import annotations
 
+from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from gcp_etl_spark.functions.hashing import md5_draw
+from gcp_etl_spark.operators.barrier import barrier
 from gcp_etl_spark.queries.registry import query
 from gcp_etl_spark.tables import t
 
@@ -395,4 +398,408 @@ def pack_sequences_budget(spark, sf_dir):
             F.sum("n_toks").alias("sum_tokens"),
             F.min("doc_id").alias("first_doc"),
         )
+    )
+
+
+# ---------------------------------------------------------------- DSIR
+_DSIR_BUCKETS = 256
+_DSIR_TARGET_LANG = "en"
+
+
+@query(
+    "dsir_importance_weights",
+    oracle=f"""
+    WITH toks AS (
+      SELECT doc_id, lang,
+             list_filter(string_split(lower(text), ' '), x -> x <> '') AS ws
+      FROM documents
+    ), grams AS (
+      SELECT doc_id, lang, ws[i+1] || ' ' || ws[i+2] AS g
+      FROM toks, unnest(range(len(ws) - 1)) AS u(i)
+      WHERE len(ws) >= 2
+    ), bkt AS (
+      SELECT doc_id, lang,
+             CAST(CAST(('0x' || substr(md5(g), 1, 8)) AS UBIGINT) AS BIGINT)
+               % {_DSIR_BUCKETS} AS bucket
+      FROM grams
+    ), doc_cnt AS (
+      SELECT doc_id, bucket, count(*) AS cnt FROM bkt GROUP BY 1, 2
+    ), src AS (
+      SELECT bucket, count(*) AS cs FROM bkt GROUP BY 1
+    ), tgt AS (
+      SELECT bucket, count(*) AS ct
+      FROM bkt WHERE lang = '{_DSIR_TARGET_LANG}' GROUP BY 1
+    ), tots AS (
+      SELECT (SELECT count(*) FROM bkt) AS ns,
+             (SELECT count(*) FROM bkt
+              WHERE lang = '{_DSIR_TARGET_LANG}') AS nt
+    ), terms AS (
+      SELECT s.bucket,
+             CAST(round(ln(
+                 ((COALESCE(tg.ct, 0) + 1.0) / (tots.nt + {_DSIR_BUCKETS}))
+               / ((s.cs + 1.0) / (tots.ns + {_DSIR_BUCKETS}))
+             ), 9) AS DECIMAL(18,9)) AS term
+      FROM src s LEFT JOIN tgt tg USING (bucket) CROSS JOIN tots
+    )
+    SELECT doc_id,
+           CAST(sum(cnt) AS BIGINT) AS n_bigrams,
+           round(CAST(sum(CAST(cnt AS DECIMAL(9,0)) * term) AS DOUBLE), 6)
+             AS weight
+    FROM doc_cnt JOIN terms USING (bucket)
+    GROUP BY doc_id
+    ORDER BY weight DESC, doc_id
+    LIMIT 50
+    """,
+    tags=("llm", "data-selection", "dsir", "text"),
+)
+def dsir_importance_weights(spark, sf_dir):
+    """DSIR importance weights (Xie et al. 2023, "Data Selection for
+    Language Models via Importance Resampling", public): score every
+    raw document by how much its hashed-n-gram profile looks like the
+    TARGET distribution — weight(doc) = Σ_b cnt_b · ln(p_target(b) /
+    p_raw(b)) over 256 hashed-bigram buckets with Laplace
+    smoothing. Target here: the ``lang = 'en'`` slice; raw: the whole
+    corpus. Top-50 docs by weight are the importance-resampling picks.
+
+    Determinism: the bucket log-ratio is rounded to 9 dp and summed as
+    DECIMAL (exact, order-free), so per-doc weights are identical in
+    both engines regardless of partitioning.
+
+    Scale: documents stream once into (doc_id, bucket) counts; the two
+    bucket distributions are 256-row relations (broadcast);
+    the per-doc weight is a map-side-combinable hash agg. Nothing
+    driver-side, no shuffle carries text."""
+    d = t(spark, sf_dir, "documents")
+    toks = F.filter(F.split(F.lower("text"), " "), lambda x: x != "")
+    grams = d.select(
+        "doc_id", "lang", toks.alias("toks")
+    ).select(
+        "doc_id",
+        "lang",
+        F.explode(
+            F.when(
+                F.size("toks") >= 2,
+                F.expr(
+                    "transform(sequence(0, size(toks) - 2),"
+                    " i -> concat(toks[i], ' ', toks[i+1]))"
+                ),
+            ).otherwise(F.array().cast("array<string>"))
+        ).alias("g"),
+    )
+    bkt = grams.select(
+        "doc_id",
+        "lang",
+        (md5_draw("g") % _DSIR_BUCKETS).alias("bucket"),
+    )
+    doc_cnt = bkt.groupBy("doc_id", "bucket").agg(F.count("*").alias("cnt"))
+    src = bkt.groupBy("bucket").agg(F.count("*").alias("cs"))
+    tgt = (
+        bkt.filter(F.col("lang") == _DSIR_TARGET_LANG)
+        .groupBy("bucket")
+        .agg(F.count("*").alias("ct"))
+    )
+    tots = bkt.agg(
+        F.count("*").alias("ns"),
+        F.count(
+            F.when(F.col("lang") == _DSIR_TARGET_LANG, 1)
+        ).alias("nt"),
+    )
+    ratio = (
+        (F.coalesce(F.col("ct"), F.lit(0)) + 1.0)
+        / (F.col("nt") + _DSIR_BUCKETS)
+    ) / ((F.col("cs") + 1.0) / (F.col("ns") + _DSIR_BUCKETS))
+    terms = (
+        src.join(tgt, "bucket", "left")
+        .crossJoin(F.broadcast(tots))
+        .select(
+            "bucket",
+            # (18,9) x (9,0) multiply stays within precision 38 so the
+            # product keeps scale 9 EXACTLY on both engines — at
+            # (28,9) x bigint Spark's precision-loss rule truncated the
+            # product scale to 6dp and the weights drifted ~1e-6
+            F.round(F.log(ratio), 9).cast("decimal(18,9)").alias("term"),
+        )
+    )
+    return (
+        doc_cnt.join(F.broadcast(terms), "bucket")
+        .groupBy("doc_id")
+        .agg(
+            F.sum("cnt").cast("long").alias("n_bigrams"),
+            F.round(
+                F.sum(
+                    F.col("cnt").cast("decimal(9,0)") * F.col("term")
+                ).cast("double"),
+                6,
+            ).alias("weight"),
+        )
+        .orderBy(F.col("weight").desc(), "doc_id")
+        .limit(50)
+    )
+
+
+# -------------------------------------------- temperature mix sampling
+
+# alpha = 0.5 → p_s ∝ sqrt(n_s) (the mT5 / XLM-R temperature value)
+_TEMP_SAMPLE_N = 300
+
+
+@query(
+    "mix_temperature_sampling",
+    oracle=f"""
+    WITH cnt AS (SELECT source, count(*) AS n FROM documents GROUP BY 1),
+    c2 AS (
+      SELECT source, n,
+             CAST(round(sqrt(CAST(n AS DOUBLE)), 9) AS DECIMAL(28,9)) AS sq
+      FROM cnt
+    ), tot AS (SELECT sum(sq) AS den FROM c2),
+    q AS (
+      SELECT source,
+             CAST(floor({_TEMP_SAMPLE_N}
+               * (CAST(sq AS DOUBLE) / CAST(den AS DOUBLE))) AS BIGINT)
+               AS quota,
+             round(CAST(sq AS DOUBLE) / CAST(den AS DOUBLE), 6) AS share
+      FROM c2 CROSS JOIN tot
+    ), ranked AS (
+      SELECT source, doc_id,
+             row_number() OVER (
+               PARTITION BY source
+               ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id
+             ) AS pick_rank
+      FROM documents
+    )
+    SELECT r.source, r.doc_id, r.pick_rank, q.quota, q.share
+    FROM ranked r JOIN q USING (source)
+    WHERE r.pick_rank <= q.quota
+    """,
+    tags=("llm", "mixture", "sampling"),
+)
+def mix_temperature_sampling(spark, sf_dir):
+    """TEMPERATURE-SCALED source sampling (the mT5/XLM-R alpha-
+    sampling scheme, public): draw a 300-doc mixture with
+    per-source probability p_s ∝ n_s^0.5 — upweights small sources
+    relative to proportional sampling without letting any source
+    dominate. The actual picks are DETERMINISTIC: per-source
+    md5(doc_id) hash order (a reproducible uniform permutation), first
+    ``quota = floor(N·p_s)`` docs win.
+
+    Determinism: per-source sqrt(n) is rounded to 9 dp and
+    decimal-summed, so the denominator (and hence every quota) is
+    exact and order-free in both engines; sqrt itself is IEEE
+    correctly-rounded everywhere.
+
+    Scale: the mixture algebra is a |sources|-row relation; the picks
+    are one window over (source) in hash order — a single shuffle of
+    (source, doc_id, hash), never text. The complement of
+    ``corpus_mix_rebalance`` (which plans weights; this one executes a
+    draw)."""
+    d = t(spark, sf_dir, "documents")
+    cnt = d.groupBy("source").agg(F.count("*").alias("n"))
+    c2 = cnt.select(
+        "source",
+        F.round(F.sqrt(F.col("n").cast("double")), 9)
+        .cast("decimal(28,9)")
+        .alias("sq"),
+    )
+    tot = c2.agg(F.sum("sq").alias("den"))
+    share = F.col("sq").cast("double") / F.col("den").cast("double")
+    q = c2.crossJoin(F.broadcast(tot)).select(
+        "source",
+        F.floor(F.lit(_TEMP_SAMPLE_N) * share).cast("long").alias("quota"),
+        F.round(share, 6).alias("share"),
+    )
+    ranked = d.select(
+        "source",
+        "doc_id",
+        F.row_number()
+        .over(
+            Window.partitionBy("source").orderBy(
+                F.md5(F.col("doc_id").cast("string")), "doc_id"
+            )
+        )
+        .cast("long")
+        .alias("pick_rank"),
+    )
+    return (
+        ranked.join(F.broadcast(q), "source")
+        .filter(F.col("pick_rank") <= F.col("quota"))
+        .select("source", "doc_id", "pick_rank", "quota", "share")
+    )
+
+
+# ------------------------------------------- packing padding waste
+_PAD_LENGTHS = (128, 256, 512, 1024)
+
+
+@query(
+    "pack_padding_waste",
+    oracle=f"""
+    WITH toks AS (
+      SELECT len(list_filter(string_split(trim(lower(text)), ' '),
+                             x -> x <> '')) AS n_toks
+      FROM documents
+    ),
+    l AS (SELECT unnest([{", ".join(str(x) for x in _PAD_LENGTHS)}]) AS seq_len)
+    SELECT seq_len,
+           CAST(sum(n_toks) AS BIGINT) AS real_tokens,
+           CAST(sum(ceil(n_toks * 1.0 / seq_len) * seq_len) AS BIGINT)
+             AS padded_tokens,
+           round(1.0 - sum(n_toks)
+                 / CAST(sum(ceil(n_toks * 1.0 / seq_len) * seq_len)
+                        AS DOUBLE), 6) AS waste_frac
+    FROM toks CROSS JOIN l
+    GROUP BY seq_len ORDER BY seq_len
+    """,
+    tags=("llm", "prep", "packing", "planning"),
+)
+def pack_padding_waste(spark, sf_dir):
+    """PADDING-WASTE PLANNER — pick the training sequence length
+    BEFORE materializing packed shards: for each candidate seq_len,
+    the fraction of padded-batch tokens that would be padding if every
+    document were chunk-padded to seq_len multiples (no cross-doc
+    packing). Read next to ``pack_sequences_budget`` (which measures
+    the greedy-packing alternative): the gap between this table's
+    waste and the packer's residuals is the payoff that justifies the
+    packing shuffle at 100 TB.
+
+    Scale: ONE scan computes token counts; the x|lengths| fan-out is a
+    broadcast literal cross join collapsed map-side into 4 running
+    sums — same single-pass sweep shape as the PR curve."""
+    d = t(spark, sf_dir, "documents")
+    toks = d.select(
+        F.size(
+            F.filter(
+                F.split(F.trim(F.lower("text")), " "), lambda x: x != ""
+            )
+        ).alias("n_toks")
+    )
+    lens = F.explode(
+        F.array(*[F.lit(x) for x in _PAD_LENGTHS])
+    ).alias("seq_len")
+    return (
+        toks.select("n_toks", lens)
+        .groupBy("seq_len")
+        .agg(
+            F.sum("n_toks").alias("real_tokens"),
+            F.sum(
+                F.ceil(F.col("n_toks") / F.col("seq_len")) * F.col("seq_len")
+            ).alias("padded_tokens"),
+            F.round(
+                F.lit(1.0)
+                - F.sum("n_toks")
+                / F.sum(
+                    F.ceil(F.col("n_toks") / F.col("seq_len"))
+                    * F.col("seq_len")
+                ).cast("double"),
+                6,
+            ).alias("waste_frac"),
+        )
+        .orderBy("seq_len")
+    )
+
+
+# ------------------------------------- bloom-prefiltered decontamination
+_BLOOM_EVAL_SRC = "src0"
+_BLOOM_N = 5  # n-gram width
+_BLOOM_TOPK = 20
+
+
+@query(
+    "decontaminate_bloom_verified",
+    oracle=f"""
+    WITH d AS (
+      SELECT doc_id, source,
+             list_filter(string_split(lower(text), ' '), x -> x <> '') AS ws
+      FROM documents
+    ),
+    g AS (
+      SELECT DISTINCT doc_id, source,
+             ws[i+1] || ' ' || ws[i+2] || ' ' || ws[i+3] || ' '
+               || ws[i+4] || ' ' || ws[i+5] AS g
+      FROM d, unnest(range(len(ws) - {_BLOOM_N - 1})) AS t(i)
+    ),
+    ev AS (SELECT DISTINCT g FROM g WHERE source = '{_BLOOM_EVAL_SRC}'),
+    hits AS (
+      SELECT c.doc_id, count(*) AS n_contaminated_ngrams
+      FROM g c JOIN ev ON c.g = ev.g
+      WHERE c.source <> '{_BLOOM_EVAL_SRC}'
+      GROUP BY 1
+    )
+    SELECT doc_id, CAST(n_contaminated_ngrams AS BIGINT)
+             AS n_contaminated_ngrams
+    FROM hits
+    ORDER BY n_contaminated_ngrams DESC, doc_id LIMIT {_BLOOM_TOPK}
+    """,
+    tags=("llm", "decontamination", "bloom", "scale"),
+)
+def decontaminate_bloom_verified(spark, sf_dir):
+    """BLOOM-PREFILTERED DECONTAMINATION (the Lee et al. / eval-leak
+    audit pattern at its production shape): the eval set's distinct
+    {_BLOOM_N}-grams build a deterministic broadcast Bloom filter
+    (operators/bloom.py, 1% fpp); the training corpus's n-grams probe
+    it Arrow-batched, and only the survivors (a ~1%-inflated superset
+    of true matches) reach the EXACT verification join — whose output
+    therefore equals the exact-join result bit-for-bit (no false
+    negatives), which is what lets a DuckDB oracle gate a sketch-
+    accelerated plan. Reports the {_BLOOM_TOPK} most-contaminated
+    training documents.
+
+    Scale: the filter is fixed-size (m ≈ 9.6 bits/member at 1% fpp)
+    versus broadcasting the full n-gram set (~8+ bytes/member hashed,
+    more as strings); the exact join then runs on ~1% of the corpus
+    n-grams instead of all of them — the same trade Spark's runtime
+    bloom join makes, here as an explicit reusable operator."""
+    from gcp_etl_spark.operators.bloom import (
+        bloom_parameters,
+        build_bloom,
+        might_contain_udf,
+    )
+
+    # r13 sf1.0 scaling probe (t8/t32 = 1.10): the single-file corpus
+    # scan gives the tokenize + 5-gram explode 1-2 partitions, so gram
+    # construction ran nearly serially before the distinct's exchange;
+    # spread it first (guide §2.5 — repartition immediately after the
+    # read; defaultParallelism keeps it scale-adaptive)
+    d = (
+        t(spark, sf_dir, "documents")
+        .repartition(spark.sparkContext.defaultParallelism)
+        .select(
+            "doc_id",
+            "source",
+            F.filter(F.split(F.lower("text"), " "), lambda x: x != "").alias(
+                "ws"
+            ),
+        )
+    )
+    grams = F.expr(
+        f"transform(sequence(0, size(ws) - {_BLOOM_N}),"
+        " i -> concat_ws(' ', slice(ws, i + 1, " + str(_BLOOM_N) + ")))"
+    )
+    # checkpoint the tokenized n-gram relation ONCE: its consumers
+    # (eval count, bloom build, candidate probe, verify join) would
+    # otherwise each re-run the corpus tokenize+explode+distinct
+    # (review finding: four corpus-scale passes where one will do)
+    g = (
+        d.filter(F.size("ws") >= _BLOOM_N)
+        .select("doc_id", "source", F.explode(grams).alias("g"))
+        .distinct()
+        .transform(barrier)
+    )
+    ev = (
+        g.filter(F.col("source") == _BLOOM_EVAL_SRC)
+        .select("g")
+        .distinct()
+        .transform(barrier)
+    )
+    n_eval = ev.count()
+    m, k = bloom_parameters(n_eval, fpp=0.01)
+    bits = build_bloom(ev, "g", m, k)
+    probe = might_contain_udf(bits, k)
+    corpus = g.filter(F.col("source") != _BLOOM_EVAL_SRC)
+    candidates = corpus.filter(probe(F.col("g")))
+    verified = candidates.join(ev, "g")  # removes bloom false positives
+    return (
+        verified.groupBy("doc_id")
+        .agg(F.count("*").alias("n_contaminated_ngrams"))
+        .orderBy(F.desc("n_contaminated_ngrams"), "doc_id")
+        .limit(_BLOOM_TOPK)
     )

@@ -580,3 +580,44 @@ def sql_distribute_sort_by(spark, sf_dir):
         ) GROUP BY bucket
         """
     )
+
+
+# ------------------------------------- VALUES + GROUP/ORDER BY ALL
+@query(
+    "sql_values_order_by_all",
+    oracle="""
+    SELECT m.band, o.o_orderstatus AS status, count(*) AS n_orders
+    FROM orders o
+    JOIN (VALUES ('1', 'high'), ('2', 'high'), ('3', 'mid'),
+                 ('4', 'low'), ('5', 'low')) m(pfx, band)
+      ON substr(o.o_orderpriority, 1, 1) = m.pfx
+    GROUP BY ALL
+    ORDER BY ALL
+    """,
+    tags=("sql", "modern", "orders"),
+)
+def sql_values_order_by_all(spark, sf_dir):
+    """VALUES inline table + GROUP BY ALL + ORDER BY ALL — three
+    modern-SQL conveniences in one statement (the literal API surface
+    next to sql_group_by_all): a VALUES-derived priority→band mapping
+    joined to the fact table, grouped and ordered by every
+    non-aggregate column implicitly. Spark 4 and DuckDB both resolve
+    ALL the same way (grouping keys in select order), which this
+    query hash-verifies.
+
+    Scale: the inline table is a broadcast by construction; the
+    aggregation is one hash agg."""
+    t(spark, sf_dir, "orders").createOrReplaceTempView("orders_vob_v")
+    return spark.sql(
+        """
+        SELECT m.band, o.o_orderstatus AS status,
+               count(*) AS n_orders
+        FROM orders_vob_v o
+        JOIN (SELECT * FROM VALUES ('1', 'high'), ('2', 'high'),
+                                   ('3', 'mid'), ('4', 'low'),
+                                   ('5', 'low') AS v(pfx, band)) m
+          ON substr(o.o_orderpriority, 1, 1) = m.pfx
+        GROUP BY ALL
+        ORDER BY ALL
+        """
+    )

@@ -50,38 +50,22 @@ def query(name: str, oracle: str | None = None, tags: tuple[str, ...] = ()):
     return deco
 
 
-# Newest-round modules first: the round driver samples the HEAD of the
-# queries() dict for its ~50-query correctness snapshot, and through
-# round 4 it never reached a single round-4 query (r4 verdict ask #4).
-# The stable sort in load_all keeps registration order within each
-# priority tier, so the established early-registry names keep their
-# relative order after the fresh modules.
-_MODULE_PRIORITY = [
-    "gcp_etl_spark.queries.r12_ops",
-    "gcp_etl_spark.queries.r11_ops",
-    "gcp_etl_spark.queries.r10_ops",
-    "gcp_etl_spark.queries.r9b_ops",
-    "gcp_etl_spark.queries.r9_ops",
-    "gcp_etl_spark.queries.r8_ops",
-    "gcp_etl_spark.queries.r7_ops",
-    "gcp_etl_spark.queries.r6_ops",
-    "gcp_etl_spark.queries.r5_ops",
-    "gcp_etl_spark.queries.stats_ops",
-    "gcp_etl_spark.queries.prep_ops",
-]
-
-
 def load_all() -> dict[str, QuerySpec]:
     """Import every query module (side-effect: registration) and return
-    the full registry, newest-round modules first."""
+    the full registry in query-name order. That is the order every
+    in-repo tool iterates, and it does not depend on which module a
+    query lives in, so moving a query never reorders the registry or
+    the sample a driver takes from its head."""
     from gcp_etl_spark.queries import (  # noqa: F401
         aggregates,
         analytics_ops,
+        eval_ops,
         graph_ops,
         io_formats,
         joins,
         llm_ops,
         llm_prep,
+        ml_ops,
         modern_sql,
         prep_ops,
         reference_parity,
@@ -92,32 +76,14 @@ def load_all() -> dict[str, QuerySpec]:
         sets_sorts,
         stats_ops,
         streaming_duals,
-        temporal_ops,
         subqueries,
         surface_ext,
+        temporal_ops,
         text_ops,
         tpch_full,
         tpch_more,
         udfs,
         windows,
     )
-    from gcp_etl_spark.queries import (  # noqa: F401
-        r5_ops,
-        r6_ops,
-        r7_ops,
-        r8_ops,
-        r9_ops,
-        r9b_ops,
-        r10_ops,
-        r11_ops,
-        r12_ops,
-    )
 
-    prio = {m: i for i, m in enumerate(_MODULE_PRIORITY)}
-    default = len(prio)
-    return dict(
-        sorted(
-            QUERIES.items(),
-            key=lambda kv: prio.get(kv[1].fn.__module__, default),
-        )
-    )
+    return dict(sorted(QUERIES.items()))

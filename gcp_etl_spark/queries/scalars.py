@@ -523,3 +523,323 @@ def geo_haversine_nearest_hub(spark, sf_dir):
             F.round("km", 4).alias("km"),
         )
     )
+
+
+# ------------------------------------------------ geohash spatial grid
+_GH_ALPHABET = "0123456789bcdefghjkmnpqrstuvwxyz"
+_GH_BITS = 15  # per axis; 30 bits total = 6 base32 chars
+_GH_PREFIX = 3  # grid aggregation precision (3 chars = 15 bits)
+
+
+def _gh_sql(div: str) -> str:
+    """The full geohash-6 expression over integer columns lat/lon, as
+    ONE arithmetic-only SQL string (bit ops via {div}/%/* so the same
+    builder emits Spark SQL with ``div`` and DuckDB SQL with ``//`` —
+    no engine-specific bit operators). Quantization is pure integer:
+    latq = (lat+90)*2^15 {div} 180, lngq = (lon+180)*2^15 {div} 360;
+    the interleave puts lng bits at odd positions (geohash standard,
+    public — Niemeyer 2008)."""
+    latq = f"(((lat + 90) * 32768) {div} 180)"
+    lngq = f"(((lon + 180) * 32768) {div} 360)"
+    terms = []
+    for i in range(_GH_BITS):
+        terms.append(f"(({lngq} {div} {1 << i}) % 2) * {1 << (2 * i + 1)}")
+        terms.append(f"(({latq} {div} {1 << i}) % 2) * {1 << (2 * i)}")
+    combined = "(" + " + ".join(terms) + ")"
+    chars = []
+    for j in range(6):
+        shift = 1 << (25 - 5 * j)
+        chars.append(
+            f"substr('{_GH_ALPHABET}', "
+            f"CAST(({combined} {div} {shift}) % 32 AS INT) + 1, 1)"
+        )
+    return " || ".join(chars)
+
+
+@query(
+    "geo_geohash_grid",
+    oracle=f"""
+    WITH pts AS (
+      SELECT event_id, user_id,
+             CAST(user_id % 360 - 180 AS BIGINT) AS lon,
+             CAST(event_id % 180 - 90 AS BIGINT) AS lat
+      FROM events
+    ), gh AS (
+      SELECT user_id, {_gh_sql('//')} AS geohash6 FROM pts
+    )
+    SELECT substr(geohash6, 1, {_GH_PREFIX}) AS cell,
+           count(*) AS n_events,
+           count(DISTINCT user_id) AS n_users,
+           min(geohash6) AS sample_geohash6
+    FROM gh GROUP BY 1
+    """,
+    tags=("geo", "spatial", "scalar", "events"),
+)
+def geo_geohash_grid(spark, sf_dir):
+    """GEOHASH GRID AGGREGATION (Niemeyer's geohash, public — the
+    spatial bucketing every geo pipeline uses for grid rollups and
+    proximity blocking): encode each event's synthetic integer
+    (lon, lat) to a 6-char geohash (15 bits/axis, standard odd-lng
+    interleave, base32 alphabet) and aggregate events/users per
+    {PREFIX}-char grid cell. The geo companion to the LSH-bucketing
+    family: equal prefixes = nearby points, so the same bucket-join
+    algebra does spatial blocking.
+
+    ONE arithmetic-only expression string (bit ops spelled as
+    integer div/%/×) is generated for BOTH engines — Spark runs it
+    via F.expr with ``div``, DuckDB with ``//`` — so the 30-bit
+    interleave and the base32 indexing are hash-verified
+    character-for-character. Pure integer end-to-end: no float
+    rounding anywhere.
+
+    Scale: encode is a zero-shuffle map; the rollup is one hash agg
+    keyed by the cell — the standard grid shape."""
+    e = t(spark, sf_dir, "events")
+    pts = e.select(
+        "user_id",
+        (F.col("user_id") % 360 - 180).cast("long").alias("lon"),
+        (F.col("event_id") % 180 - 90).cast("long").alias("lat"),
+    )
+    gh = pts.select(
+        "user_id", F.expr(_gh_sql("div")).alias("geohash6")
+    )
+    return (
+        gh.groupBy(F.substring("geohash6", 1, _GH_PREFIX).alias("cell"))
+        .agg(
+            F.count("*").alias("n_events"),
+            F.countDistinct("user_id").alias("n_users"),
+            F.min("geohash6").alias("sample_geohash6"),
+        )
+    )
+
+
+# ---------------------------------------------- spatial blocking join
+
+_GEO_R_KM = 150.0
+_GEO_CELL_DEG = 1.40625  # 180/128: lat span of 150 km (1.36°) fits ±1
+_GEO_LON_CELLS = 256     # 360/1.40625 exactly — the lon ring size the
+                         # neighbor-cell indices wrap modulo (r8 ADVICE:
+                         # without the wrap, pairs straddling ±180°
+                         # were never candidates)
+_GEO_MAX_LAT = 60        # keeps the lon span of 150 km ≤ 2 cells
+_GEO_TYPE = "signup"
+
+_HAV_SQL = (
+    "2 * 6371.0 * asin(sqrt("
+    " pow(sin(radians(b_lat - a_lat) / 2), 2)"
+    " + cos(radians(a_lat)) * cos(radians(b_lat))"
+    " * pow(sin(radians(b_lon - a_lon) / 2), 2)))"
+)
+
+
+def _geo_blocked_pairs(pts):
+    """Grid-blocked candidate pairs within ``_GEO_R_KM`` of each other,
+    given ``pts(id, lon double, lat double)`` with |lat| <= _GEO_MAX_LAT.
+    The lon cell index lives on a RING of ``_GEO_LON_CELLS`` cells
+    (360/1.40625 = 256 exactly), so the exploded neighbor indices wrap
+    with ``pmod`` — haversine distance itself wraps at the antimeridian,
+    and a point at lon -180 is 1°-of-longitude away from one at +179
+    (r8 ADVICE high: the unwrapped index silently excluded those pairs;
+    regression pinned by tests/test_r7.py::test_geo_blocked_join_wraps_
+    antimeridian against a brute-force cross join over wrap points)."""
+    cy = F.floor((F.col("lat") + 90) / _GEO_CELL_DEG).cast("int")
+    cx = F.floor((F.col("lon") + 180) / _GEO_CELL_DEG).cast("int")
+    a = pts.select(
+        F.col("id").alias("id_a"),
+        F.col("lat").alias("a_lat"),
+        F.col("lon").alias("a_lon"),
+        F.explode(
+            F.array(
+                *[
+                    F.struct(
+                        (cy + dy).alias("cy"),
+                        F.pmod(cx + dx, F.lit(_GEO_LON_CELLS)).alias("cx"),
+                    )
+                    for dy in (-1, 0, 1)
+                    for dx in (-2, -1, 0, 1, 2)
+                ]
+            )
+        ).alias("c"),
+    ).select("id_a", "a_lat", "a_lon", "c.cy", "c.cx")
+    b = pts.select(
+        F.col("id").alias("id_b"),
+        F.col("lat").alias("b_lat"),
+        F.col("lon").alias("b_lon"),
+        cy.alias("cy"),
+        F.pmod(cx, F.lit(_GEO_LON_CELLS)).alias("cx"),
+    )
+    km = F.round(F.expr(_HAV_SQL), 4)
+    return (
+        a.join(b, ["cy", "cx"])
+        .filter(F.col("id_a") < F.col("id_b"))
+        .withColumn("km", km)
+        .filter(F.col("km") <= _GEO_R_KM)
+        .select("id_a", "id_b", "km")
+    )
+
+
+@query(
+    "geo_blocked_distance_join",
+    oracle=f"""
+    WITH pts AS (
+      SELECT event_id AS id,
+             CAST(user_id % 360 - 180 AS DOUBLE) AS lon,
+             CAST(event_id % 180 - 90 AS DOUBLE) AS lat
+      FROM events
+      WHERE event_type = '{_GEO_TYPE}'
+        AND abs(event_id % 180 - 90) <= {_GEO_MAX_LAT}
+    )
+    SELECT a.id AS id_a, b.id AS id_b,
+           round({_HAV_SQL.replace('a_lat', 'a.lat').replace('a_lon', 'a.lon')
+                          .replace('b_lat', 'b.lat').replace('b_lon', 'b.lon')},
+                 4) AS km
+    FROM pts a JOIN pts b ON a.id < b.id
+    WHERE round({_HAV_SQL.replace('a_lat', 'a.lat').replace('a_lon', 'a.lon')
+                          .replace('b_lat', 'b.lat').replace('b_lon', 'b.lon')},
+                4) <= {_GEO_R_KM}
+    """,
+    tags=("geo", "spatial", "join", "events", "scale"),
+)
+def geo_blocked_distance_join(spark, sf_dir):
+    """SPATIAL DISTANCE JOIN via grid blocking — all point pairs within
+    {R} km, computed with the LSH-bucket-join algebra instead of a
+    cross product: quantize each point to a {CELL}° grid cell, explode
+    ONE side into its 3×5 neighbor cells (±1 lat cell covers the
+    1.36° lat span of {R} km; ±2 lon cells cover the ≤2.71° lon span
+    at |lat| ≤ {MAXLAT}°, the query's declared domain), equi-join on
+    the cell, then the exact haversine ≤ {R} filter — a candidate
+    SUPERSET by the geometry above, so the blocked join returns
+    EXACTLY the cross join's answer. The lon index wraps modulo the
+    256-cell ring (``pmod``) so antimeridian-straddling pairs remain
+    candidates (r8 ADVICE: lon −180 vs +179 is ~111 km, inside the
+    radius, yet unwrapped indices 0 vs 255 never met).
+
+    That zero-miss property is value-proven, not asserted: the DuckDB
+    oracle is the BRUTE-FORCE O(n²) cross join, so a single pair the
+    blocking misses is a hash mismatch — and because the fixture-scale
+    event grid may coincidentally contain no wrap pairs, the wrap case
+    is ALSO pinned directly (tests/test_r8.py wrap regression runs this
+    helper against a brute-force cross join over synthetic ±180°
+    points). Boundary compare on round(km, 4) so cross-engine trig
+    ulps cannot flip membership — the geo_haversine_nearest_hub
+    convention.
+
+    Scale: |points × 15| rows shuffle keyed by cell — never
+    point × point; per-cell density bounds the candidate fanout, and
+    hot cells split with the same salting as any skewed equi-join."""
+    e = t(spark, sf_dir, "events").filter(
+        (F.col("event_type") == _GEO_TYPE)
+        & (F.abs(F.col("event_id") % 180 - 90) <= _GEO_MAX_LAT)
+    )
+    pts = e.select(
+        F.col("event_id").alias("id"),
+        (F.col("user_id") % 360 - 180).cast("double").alias("lon"),
+        (F.col("event_id") % 180 - 90).cast("double").alias("lat"),
+    )
+    return _geo_blocked_pairs(pts)
+
+
+# ---------------------------------------------- point-in-polygon
+
+# Simple star-shaped test polygon (lon, lat vertex ring, non-convex:
+# four of the eight vertices pull inward, so ray casting is exercised
+# on a shape where bounding-box or convex-hull tests would be wrong).
+_PIP_POLY = [
+    (-120.0, -60.0),
+    (-30.0, -20.0),
+    (60.0, -60.0),
+    (30.0, 0.0),
+    (60.0, 60.0),
+    (-30.0, 20.0),
+    (-120.0, 60.0),
+    (-90.0, 0.0),
+]
+
+
+def _pip_crossings_sql() -> str:
+    """ONE ray-casting expression string shared verbatim by BOTH
+    engines (the geo_geohash_grid trick): for each polygon edge,
+    count a crossing of the horizontal ray from (lon, lat) going
+    east, via the classic semi-open rule. Identical IEEE arithmetic
+    on identical literals ⇒ bit-identical crossing counts."""
+    terms = []
+    n = len(_PIP_POLY)
+    for i in range(n):
+        x1, y1 = _PIP_POLY[i]
+        x2, y2 = _PIP_POLY[(i + 1) % n]
+        terms.append(
+            f"(CASE WHEN (({y1} > lat) <> ({y2} > lat)) AND "
+            f"(lon < ({x2} - {x1}) * (lat - {y1}) / ({y2} - {y1}) "
+            f"+ {x1}) THEN 1 ELSE 0 END)"
+        )
+    return " + ".join(terms)
+
+
+@query(
+    "geo_point_in_polygon",
+    oracle=f"""
+    WITH pts AS (
+      SELECT event_type,
+             CAST((event_id * 7919) % 360 - 180 AS DOUBLE) AS lon,
+             CAST((event_id * 104729) % 180 - 90 AS DOUBLE) AS lat
+      FROM events
+    ), hit AS (
+      SELECT event_type,
+             CASE WHEN ({_pip_crossings_sql()}) % 2 = 1
+                  THEN 1 ELSE 0 END AS inside
+      FROM pts
+    )
+    SELECT event_type, count(*) AS n_points,
+           CAST(sum(inside) AS BIGINT) AS n_inside,
+           round(sum(inside) * 1.0 / count(*), 6) AS inside_share
+    FROM hit GROUP BY 1 ORDER BY 1
+    """,
+    tags=("geo", "spatial", "events"),
+)
+def geo_point_in_polygon(spark, sf_dir):
+    """POINT-IN-POLYGON via ray casting (even-odd rule) against a
+    non-convex 8-vertex polygon — the spatial predicate underneath
+    geofencing and region rollups, next to the suite's haversine and
+    grid-blocking ops. Each point casts an eastward ray; crossings
+    count per edge with the classic semi-open rule
+    (y1 > lat) ≠ (y2 > lat), so shared vertices are counted once.
+
+    The crossing expression is ONE generated SQL string evaluated
+    verbatim by BOTH engines (the geo_geohash_grid convention):
+    identical literals + identical IEEE ops ⇒ identical counts, no
+    float-drift surface at all.
+
+    Scale: a pure per-row map (no shuffle until the per-type count
+    rollup); an 8-edge test is ~24 flops/row, and at 100 TB a real
+    multi-polygon layer would broadcast the (small) vertex table and
+    run the same per-partition arithmetic."""
+    e = t(spark, sf_dir, "events")
+    # multiplicative-hash lattice (coprime multipliers) so BOTH axes
+    # cover their full range at every fixture scale — the raw ids are
+    # near-sequential and would pin one axis to a narrow band
+    pts = e.select(
+        "event_type",
+        ((F.col("event_id") * 7919) % 360 - 180)
+        .cast("double")
+        .alias("lon"),
+        ((F.col("event_id") * 104729) % 180 - 90)
+        .cast("double")
+        .alias("lat"),
+    )
+    hit = pts.select(
+        "event_type",
+        F.when(
+            F.expr(f"({_pip_crossings_sql()}) % 2 = 1"), 1
+        ).otherwise(0).alias("inside"),
+    )
+    return (
+        hit.groupBy("event_type")
+        .agg(
+            F.count("*").alias("n_points"),
+            F.sum("inside").alias("n_inside"),
+            F.round(F.sum("inside") * 1.0 / F.count("*"), 6).alias(
+                "inside_share"
+            ),
+        )
+        .orderBy("event_type")
+    )

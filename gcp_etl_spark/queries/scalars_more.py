@@ -668,3 +668,70 @@ def scalar_string_transform(spark, sf_dir):
         F.overlay("o_orderpriority", F.lit("XX"), 3, 2).alias("overlaid"),
         F.initcap("o_orderpriority").alias("initcapped"),
     )
+
+
+# ------------------------------------------- temporal/scalar extras
+@query(
+    "scalar_temporal_extras",
+    oracle="""
+    SELECT event_id,
+           ts + INTERVAL 3 HOUR AS ts_plus_3h,
+           ts + to_minutes(CAST(90 + event_id % 30 AS BIGINT))
+             AS ts_plus_dyn,
+           CAST(floor(epoch(ts - TIMESTAMP '2024-01-01')
+                      / 60.0) AS BIGINT) AS minutes_since_jan1,
+           CASE WHEN value < 0 THEN 0
+                WHEN value >= 500 THEN 11
+                ELSE CAST(floor(value / 50.0) AS BIGINT) + 1
+           END AS value_bucket,
+           strftime(ts, '%Y-%m-%d %H') AS hour_label,
+           CAST(strptime(strftime(ts, '%Y-%m-%d %H:%M:%S'),
+                         '%Y-%m-%d %H:%M:%S') AS TIMESTAMP)
+             AS ts_roundtrip
+    FROM events
+    ORDER BY event_id LIMIT 20
+    """,
+    tags=("scalar", "temporal", "events"),
+)
+def scalar_temporal_extras(spark, sf_dir):
+    """TEMPORAL SCALAR EXTRAS — the remaining literal API surface the
+    date/datetime batteries don't touch: ``timestampadd`` (unit
+    arithmetic), ``make_dt_interval`` (dynamic per-row intervals),
+    ``timestampdiff`` (elapsed minutes since an anchor),
+    ``width_bucket`` (equi-width binning as a FUNCTION, vs the
+    histogram queries' floor arithmetic), ``to_char`` (datetime →
+    string with a format), and a ``try_to_timestamp`` parse of the
+    formatted value (the try_* family's datetime member) proving the
+    format roundtrips.
+
+    The oracle computes the same VALUES through DuckDB's equivalents
+    (INTERVAL arithmetic, epoch differences, floor binning, strftime/
+    strptime) — the check is value-level semantics, not shared
+    function names; sub-second truncation in the roundtrip column is
+    exercised deliberately (to_char second precision).
+
+    Scale: pure per-row projection; TopK(20) output."""
+    e = t(spark, sf_dir, "events")
+    return (
+        e.select(
+            "event_id",
+            F.expr("timestampadd(HOUR, 3, ts)").alias("ts_plus_3h"),
+            F.expr(
+                "ts + make_dt_interval(0, 0, 90 + event_id % 30, 0)"
+            ).alias("ts_plus_dyn"),
+            F.expr(
+                "timestampdiff(MINUTE, TIMESTAMP '2024-01-01', ts)"
+            ).alias("minutes_since_jan1"),
+            F.expr("width_bucket(value, 0, 500, 10)").alias(
+                "value_bucket"
+            ),
+            F.expr("to_char(ts, 'yyyy-MM-dd HH')").alias("hour_label"),
+            F.expr(
+                "CAST(try_to_timestamp("
+                "to_char(ts, 'yyyy-MM-dd HH:mm:ss'),"
+                " 'yyyy-MM-dd HH:mm:ss') AS TIMESTAMP_NTZ)"
+            ).alias("ts_roundtrip"),
+        )
+        .orderBy("event_id")
+        .limit(20)
+    )

@@ -12,9 +12,10 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from gcp_etl_spark.functions.hashing import md5_draw
+from gcp_etl_spark.operators.barrier import barrier
 from gcp_etl_spark.queries.registry import query
 from gcp_etl_spark.tables import t
-from gcp_etl_spark.operators.barrier import barrier
 
 
 @query(
@@ -1462,4 +1463,495 @@ def join_skew_salted(spark, sf_dir):
         F.sum(F.col("l_quantity").cast("decimal(18,2)"))
         .cast("double")
         .alias("total_qty"),
+    )
+
+
+# ------------------------------------------- weighted reservoir sample
+_ES_K = 50
+
+
+@query(
+    "sample_weighted_reservoir",
+    oracle=f"""
+    SELECT doc_id,
+           CAST(n_chars AS BIGINT) AS weight,
+           round(
+             ln(CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8))
+                     AS UBIGINT) / 4294967296.0) / n_chars, 9
+           ) AS es_key
+    FROM documents
+    ORDER BY es_key DESC, doc_id
+    LIMIT {_ES_K}
+    """,
+    tags=("llm", "sampling", "prep"),
+)
+def sample_weighted_reservoir(spark, sf_dir):
+    """WEIGHTED reservoir sample without replacement (Efraimidis &
+    Spirakis 2006, public): each row gets key u^(1/w) for a uniform u
+    and weight w (here n_chars — longer docs proportionally likelier);
+    the k largest keys ARE a weighted sample without replacement. We
+    rank by the monotone-equivalent ln(u)/w (descending), which avoids
+    pow() and keeps both engines on a single libm call.
+
+    Determinism: u is the md5-hash uniform (first 8 hex digits /
+    2^32) — the engine's standard seeded-draw construction (same as
+    DSIR's bucket hash and the bootstrap's Poisson draw), identical
+    integer arithmetic in both engines; ln of the same double divided
+    by the same integer is bit-stable across libm implementations at
+    the 9 dp contract.
+
+    Scale: the canonical ONE-PASS distributed sample — orderBy+limit
+    compiles to TakeOrderedAndProject (per-partition top-k, driver
+    merges k·partitions rows); no shuffle ever carries the corpus, no
+    per-row state beyond the k-row heap. This is how you draw a
+    quality-weighted training subset from 100 TB without a sort."""
+    d = t(spark, sf_dir, "documents")
+    u = md5_draw(F.col("doc_id").cast("string"), uniform=True)
+    return (
+        d.select(
+            "doc_id",
+            F.col("n_chars").cast("long").alias("weight"),
+            F.round(F.log(u) / F.col("n_chars"), 9).alias("es_key"),
+        )
+        .orderBy(F.desc("es_key"), "doc_id")
+        .limit(_ES_K)
+    )
+
+
+# ------------------------------------------------ join-key skew report
+_SKEW_KEYS = ("l_orderkey", "l_partkey", "l_suppkey")
+
+
+@query(
+    "diag_skew_report",
+    oracle=f"""
+    WITH u AS (
+      SELECT 'l_orderkey' AS key_col, l_orderkey AS k FROM lineitem
+      UNION ALL SELECT 'l_partkey', l_partkey FROM lineitem
+      UNION ALL SELECT 'l_suppkey', l_suppkey FROM lineitem
+    ),
+    c AS (SELECT key_col, k, count(*) AS cnt FROM u GROUP BY 1, 2)
+    SELECT key_col,
+           CAST(count(*) AS BIGINT) AS n_keys,
+           CAST(sum(cnt) AS BIGINT) AS total_rows,
+           CAST(max(cnt) AS BIGINT) AS max_cnt,
+           round(max(cnt) / avg(cnt), 6) AS skew_factor,
+           quantile_cont(cnt, 0.5) AS p50_cnt,
+           quantile_cont(cnt, 0.99) AS p99_cnt
+    FROM c GROUP BY key_col ORDER BY key_col
+    """,
+    tags=("diagnostics", "skew", "scale", "quantiles"),
+)
+def diag_skew_report(spark, sf_dir):
+    """JOIN-KEY SKEW REPORT — the diagnostic you run BEFORE deciding to
+    salt: per candidate join key of the fact table, the key-count
+    distribution (distinct keys, hottest key, max/mean skew factor,
+    exact p50/p99 per-key counts). A skew_factor near 1 says hash
+    partitioning balances; p99 << max says one pathological key —
+    salt exactly that one (the scale_ops salted-join pattern); a heavy
+    p99 tail says bump shuffle partitions / rely on AQE skew-join.
+
+    Scale shape: ONE scan of the fact table fans out via a struct-
+    array explode (x|keys|, map-side), collapses to (key_col, key)
+    counts with partial aggregation, and the distribution stats run on
+    the count relation: max/avg as a grouped agg, the percentiles
+    through the engine-standard two-pass range-partitioned
+    exact_quantiles (never a single-reducer value map). Nothing
+    driver-side at any corpus size."""
+    from gcp_etl_spark.operators.quantiles import exact_quantiles
+
+    li = t(spark, sf_dir, "lineitem")
+    u = li.select(
+        F.explode(
+            F.array(
+                *[
+                    F.struct(
+                        F.lit(c).alias("key_col"),
+                        F.col(c).cast("long").alias("k"),
+                    )
+                    for c in _SKEW_KEYS
+                ]
+            )
+        ).alias("e")
+    ).select("e.key_col", "e.k")
+    # lazy localCheckpoint (r12, guide §1.2): the (key_col, key) count
+    # relation feeds BOTH the distribution stats and the quantile
+    # branch — without the barrier each branch re-ran the full
+    # scan → explode → count fan-out (the fact pipeline executed
+    # twice); with it the fan-out runs once and both branches read the
+    # materialized, distinct-keys-sized counts.
+    c = (
+        u.groupBy("key_col", "k")
+        .agg(F.count("*").alias("cnt"))
+        .transform(barrier)
+    )
+    aggs = c.groupBy("key_col").agg(
+        F.count("*").alias("n_keys"),
+        F.sum("cnt").alias("total_rows"),
+        F.max("cnt").alias("max_cnt"),
+        F.round(F.max("cnt") / F.avg("cnt"), 6).alias("skew_factor"),
+    )
+    q = exact_quantiles(
+        c,
+        "cnt",
+        {"p50_cnt": 0.5, "p99_cnt": 0.99},
+        group_cols=["key_col"],
+        # pinned rank path: the quantile input is the per-KEY count
+        # relation — distinct-key-sized, i.e. unbounded at scale, so
+        # the adaptive gate's aggregate path is never right here; the
+        # rank path's internal checkpoint also keeps the fact table at
+        # ONE visible scan (plan contract pinned in
+        # tests/test_scale_strategies.py)
+        strategy="rank",
+    )
+    return aggs.join(q, "key_col").orderBy("key_col")
+
+
+# -------------------------------------------- KMV distinct-overlap
+_KMV_K = 64
+_KMV_SRC_A = "src0"
+_KMV_SRC_B = "src1"
+
+
+def _kmv_grams_sql() -> str:
+    return f"""
+    w AS (
+      SELECT source,
+             list_filter(string_split(lower(text), ' '),
+                         x -> x <> '') AS ws
+      FROM documents WHERE source IN ('{_KMV_SRC_A}', '{_KMV_SRC_B}')
+    ),
+    g AS (
+      SELECT DISTINCT source, ws[i+1] || ' ' || ws[i+2] AS g
+      FROM w, unnest(range(len(ws) - 1)) AS t(i)
+    ),
+    h AS (
+      SELECT source, g,
+             CAST(('0x' || substr(md5(g), 1, 8)) AS UBIGINT)
+               / 4294967296.0 AS h
+      FROM g
+    ),
+    akmv AS (SELECT h FROM h WHERE source = '{_KMV_SRC_A}'
+             ORDER BY h, g LIMIT {_KMV_K}),
+    bkmv AS (SELECT h FROM h WHERE source = '{_KMV_SRC_B}'
+             ORDER BY h, g LIMIT {_KMV_K}),
+    ukmv AS (
+      SELECT h FROM (SELECT h FROM akmv UNION SELECT h FROM bkmv)
+      ORDER BY h LIMIT {_KMV_K}
+    )
+    """
+
+
+@query(
+    "sketch_kmv_overlap",
+    oracle=f"""
+    WITH {_kmv_grams_sql()},
+    theta AS (SELECT max(h) AS th, count(*) AS ku FROM ukmv),
+    rho AS (
+      SELECT count(*) AS both FROM ukmv u
+      WHERE EXISTS (SELECT 1 FROM akmv a WHERE a.h = u.h)
+        AND EXISTS (SELECT 1 FROM bkmv b WHERE b.h = u.h)
+    ),
+    exact AS (
+      SELECT count(DISTINCT g) AS xu,
+             count(DISTINCT CASE WHEN na > 0 AND nb > 0 THEN g END) AS xi
+      FROM (
+        SELECT g,
+               count(CASE WHEN source = '{_KMV_SRC_A}' THEN 1 END) AS na,
+               count(CASE WHEN source = '{_KMV_SRC_B}' THEN 1 END) AS nb
+        FROM h GROUP BY g
+      )
+    )
+    SELECT {_KMV_K} AS k,
+           round((theta.ku - 1) / theta.th, 6) AS est_union,
+           CAST(exact.xu AS BIGINT) AS exact_union,
+           round(rho.both * 1.0 / theta.ku
+                 * ((theta.ku - 1) / theta.th), 6) AS est_intersection,
+           CAST(exact.xi AS BIGINT) AS exact_intersection
+    FROM theta, rho, exact
+    """,
+    tags=("sketch", "dedup", "distinct", "scale"),
+)
+def sketch_kmv_overlap(spark, sf_dir):
+    """KMV (k-minimum-values / bottom-k) DISTINCT-OVERLAP sketch
+    (Bar-Yossef et al. 2002; the Theta-sketch set algebra, public):
+    estimate the distinct-bigram union and intersection of two corpus
+    sources from k=64 hash values per side. est_union = (k-1)/theta
+    with theta the k-th smallest hash of the merged sketch; the
+    intersection rides the union sketch — a merged value is in A iff
+    it is in A's sketch (valid because theta <= each side's own
+    threshold), so est_inter = (matching fraction) x est_union. The
+    exact truths are computed alongside for the gate; a production
+    run ships ONLY the sketches.
+
+    Determinism: the hash is the engine-standard md5 uniform; both
+    engines pick the same k values (h then gram tiebreak) and the
+    estimates divide identical doubles.
+
+    Scale: THE point of the sketch — each side reduces to k doubles
+    via per-partition top-k (TakeOrdered; corpus never shuffles), the
+    merge is k+k values, and cross-SOURCE overlap across a 100 TB
+    corpus becomes an O(k) postprocess. The exactness columns are the
+    test-scale luxury the sketch exists to avoid."""
+    d = t(spark, sf_dir, "documents").filter(
+        F.col("source").isin(_KMV_SRC_A, _KMV_SRC_B)
+    )
+    toks = F.filter(F.split(F.lower("text"), " "), lambda x: x != "")
+    grams = (
+        d.select("source", toks.alias("ws"))
+        .select(
+            "source",
+            F.explode(
+                F.when(
+                    F.size("ws") >= 2,
+                    F.expr(
+                        "transform(sequence(0, size(ws) - 2),"
+                        " i -> concat(ws[i], ' ', ws[i+1]))"
+                    ),
+                ).otherwise(F.array().cast("array<string>"))
+            ).alias("g"),
+        )
+        .distinct()
+    )
+    h = grams.select(
+        "source",
+        "g",
+        md5_draw("g", uniform=True).alias("h"),
+    )
+    akmv = (
+        h.filter(F.col("source") == _KMV_SRC_A)
+        .orderBy("h", "g")
+        .limit(_KMV_K)
+        .select("h")
+    )
+    bkmv = (
+        h.filter(F.col("source") == _KMV_SRC_B)
+        .orderBy("h", "g")
+        .limit(_KMV_K)
+        .select("h")
+    )
+    ukmv = (
+        akmv.unionByName(bkmv).distinct().orderBy("h").limit(_KMV_K)
+    )
+    theta = ukmv.agg(
+        F.max("h").alias("th"), F.count("*").alias("ku")
+    )
+    both = (
+        ukmv.join(akmv, "h", "left_semi")
+        .join(bkmv, "h", "left_semi")
+        .agg(F.count("*").alias("both"))
+    )
+    exact = (
+        h.groupBy("g")
+        .agg(
+            F.count(F.when(F.col("source") == _KMV_SRC_A, 1)).alias("na"),
+            F.count(F.when(F.col("source") == _KMV_SRC_B, 1)).alias("nb"),
+        )
+        .agg(
+            F.count("*").alias("xu"),
+            F.count(
+                F.when((F.col("na") > 0) & (F.col("nb") > 0), 1)
+            ).alias("xi"),
+        )
+    )
+    return (
+        theta.crossJoin(both)
+        .crossJoin(exact)
+        .select(
+            F.lit(_KMV_K).cast("int").alias("k"),
+            F.round((F.col("ku") - 1) / F.col("th"), 6).alias("est_union"),
+            F.col("xu").cast("long").alias("exact_union"),
+            F.round(
+                F.col("both") / F.col("ku") * ((F.col("ku") - 1) / F.col("th")),
+                6,
+            ).alias("est_intersection"),
+            F.col("xi").cast("long").alias("exact_intersection"),
+        )
+    )
+
+
+# -------------------------------------------- streaming KMV distinct
+_KMVD_K = 64
+
+
+@query(
+    "sketch_kmv_distinct",
+    oracle=f"""
+    WITH h AS (
+      SELECT DISTINCT
+             CAST(('0x' || substr(md5(CAST(user_id AS VARCHAR)), 1, 8))
+                  AS UBIGINT) / 4294967296.0 AS h
+      FROM events
+    ),
+    bk AS (SELECT h FROM h ORDER BY h LIMIT {_KMVD_K}),
+    s AS (SELECT count(*) AS k_used, max(h) AS kth FROM bk)
+    SELECT k_used,
+           round(kth, 9) AS kth_hash,
+           round(CASE WHEN k_used < {_KMVD_K}
+                      THEN CAST(k_used AS DOUBLE)
+                      ELSE ({_KMVD_K} - 1) / kth END, 4) AS est_distinct
+    FROM s
+    """,
+    tags=("sketch", "distinct-count", "streaming-dual"),
+)
+def sketch_kmv_distinct(spark, sf_dir):
+    """KMV (bottom-k) DISTINCT-COUNT SKETCH of event users — the
+    single-set companion to ``sketch_kmv_overlap``, registered as the
+    batch dual of the STREAMING sketch (streaming/kmv_stream.py): KMV
+    is exactly mergeable (global bottom-k == bottom-k of per-epoch
+    bottom-k's), so the streamed per-micro-batch sketches merge to
+    THIS relation bit-for-bit however the stream is batched — pinned
+    by tests/test_r7.py::test_stream_kmv_equals_batch + the replay-
+    idempotence twin.
+
+    Determinism: the hash is the engine-standard md5 uniform; the
+    estimator (k-1)/h_k divides identical doubles.
+
+    Scale: the corpus reduces to k=64 doubles via per-partition
+    TakeOrdered — distinct users never shuffle; per-epoch streaming
+    state is ~512 B."""
+    from gcp_etl_spark.streaming.kmv_stream import kmv_bottom_k, kmv_estimate
+
+    e = t(spark, sf_dir, "events")
+    return kmv_estimate(kmv_bottom_k(e, "user_id", _KMVD_K), _KMVD_K)
+
+
+# ------------------------------------------- systematic sampling
+_SYS_K = 17  # take every 17th row of the keyed total order
+
+
+@query(
+    "sample_systematic",
+    oracle=f"""
+    WITH r AS (
+      SELECT o_orderkey, o_totalprice, o_orderpriority,
+             row_number() OVER (ORDER BY o_orderkey) AS rn
+      FROM orders
+    ), pick AS (
+      SELECT * FROM r WHERE rn % {_SYS_K} = 1
+    )
+    SELECT o_orderpriority,
+           CAST(count(*) AS BIGINT) AS n_sampled,
+           CAST(sum(o_orderkey) AS BIGINT) AS key_sum,
+           CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT)
+             AS cents_sum
+    FROM pick GROUP BY 1
+    """,
+    tags=("sampling", "scale", "orders"),
+)
+def sample_systematic(spark, sf_dir):
+    """SYSTEMATIC SAMPLING — every {K}-th row of the keyed total order
+    (the survey-sampling design that guarantees even coverage of an
+    ordered frame, complementing the suite's hash/stratified/weighted/
+    reservoir samplers). Global positions come from the two-pass
+    ``global_row_number`` (range exchange + broadcast prefix offsets),
+    NEVER a single-partition window, so the selection is deterministic
+    and engine-exact at any scale; the sample is verified by per-class
+    keyed checksums.
+
+    Scale: one range exchange; selection is a map-side modulo
+    filter."""
+    from gcp_etl_spark.operators.quantiles import global_row_number
+
+    o = t(spark, sf_dir, "orders").select(
+        "o_orderkey", "o_totalprice", "o_orderpriority"
+    )
+    r = global_row_number(o, ["o_orderkey"], rn_col="rn")
+    pick = r.filter(F.col("rn") % _SYS_K == 1)
+    return pick.groupBy("o_orderpriority").agg(
+        F.count("*").cast("long").alias("n_sampled"),
+        F.sum("o_orderkey").cast("long").alias("key_sum"),
+        F.sum(F.round(F.col("o_totalprice") * 100).cast("long"))
+        .cast("long")
+        .alias("cents_sum"),
+    )
+
+
+# --------------- rendezvous (HRW) resharding movement (r12)
+_HRW_FROM = 8
+_HRW_TO = 9
+
+
+def _hrw_combined(key, s: int):
+    """Deterministic 32-bit md5 score for (key, shard), packed with
+    the shard id in the low 4 bits so argmax == plain max of one long
+    (ties — p ~ 2^-32 per pair — break toward the higher shard id,
+    identically in both engines)."""
+    return md5_draw(F.concat(key.cast("string"), F.lit(f":{s}"))) * 16 + s
+
+
+@query(
+    "scale_rendezvous_resharding",
+    oracle=f"""
+    WITH scored AS (
+      SELECT d.doc_id,
+             greatest({", ".join(
+                 "(('0x' || substr(md5(CAST(d.doc_id AS VARCHAR) || ':"
+                 + str(s) + "'), 1, 8))::BIGINT * 16 + " + str(s) + ")"
+                 for s in range(_HRW_FROM)
+             )}) % 16 AS shard_from,
+             greatest({", ".join(
+                 "(('0x' || substr(md5(CAST(d.doc_id AS VARCHAR) || ':"
+                 + str(s) + "'), 1, 8))::BIGINT * 16 + " + str(s) + ")"
+                 for s in range(_HRW_TO)
+             )}) % 16 AS shard_to
+      FROM documents d
+    )
+    SELECT CAST(count(*) AS BIGINT) AS n_docs,
+           CAST(count(*) FILTER (shard_from <> shard_to) AS BIGINT)
+             AS hrw_moved,
+           round(CAST(count(*) FILTER (shard_from <> shard_to)
+                 AS DOUBLE) / count(*), 6) AS hrw_moved_frac,
+           CAST(count(*) FILTER (doc_id % {_HRW_FROM}
+                 <> doc_id % {_HRW_TO}) AS BIGINT) AS mod_moved,
+           round(CAST(count(*) FILTER (doc_id % {_HRW_FROM}
+                 <> doc_id % {_HRW_TO}) AS DOUBLE) / count(*), 6)
+             AS mod_moved_frac
+    FROM scored
+    """,
+    tags=("scale", "sharding", "hashing", "documents"),
+)
+def scale_rendezvous_resharding(spark, sf_dir):
+    """RENDEZVOUS (highest-random-weight) SHARD ASSIGNMENT and the
+    data-movement cost of growing the shard count 8 -> 9, next to the
+    naive mod-N baseline. HRW (Thaler-Ravishankar 1996, public) moves
+    only the keys whose NEW shard wins the per-key score tournament —
+    expected 1/9 of the corpus — while mod-N remaps ~8/9 of all keys.
+    At 100 TB this is THE resharding decision: the output prices it
+    (hrw_moved_frac ~0.11 vs mod_moved_frac ~0.89).
+
+    Exactness: the per-(key, shard) score is the engine-standard md5
+    32-bit integer, packed with the shard id in the low 4 bits so the
+    argmax is a plain integer ``greatest`` — no floats anywhere.
+
+    Scale: one narrow projection per document (9 md5 calls JVM-side in
+    the scan task), one count aggregate; nothing shuffles but the
+    final partial counts."""
+    d = t(spark, sf_dir, "documents").select("doc_id")
+    key = F.col("doc_id")
+    scored = d.select(
+        "doc_id",
+        (
+            F.greatest(*[_hrw_combined(key, s) for s in range(_HRW_FROM)])
+            % 16
+        ).alias("shard_from"),
+        (
+            F.greatest(*[_hrw_combined(key, s) for s in range(_HRW_TO)])
+            % 16
+        ).alias("shard_to"),
+    )
+    moved = F.col("shard_from") != F.col("shard_to")
+    mod_moved = (F.col("doc_id") % _HRW_FROM) != (
+        F.col("doc_id") % _HRW_TO
+    )
+    return scored.agg(
+        F.count("*").cast("long").alias("n_docs"),
+        F.count_if(moved).cast("long").alias("hrw_moved"),
+        F.round(
+            F.count_if(moved).cast("double") / F.count("*"), 6
+        ).alias("hrw_moved_frac"),
+        F.count_if(mod_moved).cast("long").alias("mod_moved"),
+        F.round(
+            F.count_if(mod_moved).cast("double") / F.count("*"), 6
+        ).alias("mod_moved_frac"),
     )

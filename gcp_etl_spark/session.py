@@ -119,8 +119,6 @@ def get_spark(
         b = b.config(k, v)
     spark = b.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    if os.environ.get("SPARK_GRAFT_QUIET_BENIGN") == "1":
-        _quiet_benign_warnings(spark)
     return spark
 
 
@@ -136,9 +134,8 @@ def _quiet_benign_warnings(spark: SparkSession) -> None:
     Configurator through py4j; failure-tolerant in case a deployment
     swaps the logging backend.
 
-    Gated behind SPARK_GRAFT_QUIET_BENIGN=1 (set by bench.py) and
-    called directly by tools/verify_local.py and the pytest session
-    fixture (r11 ask #4: one LOGGING-layer mechanism for the whole
+    Called directly by bench.py, perfbench, the tools and the pytest
+    session fixture (r11 ask #4: one LOGGING-layer mechanism for the whole
     bench/verify/test tooling — never plan-changing markers, whose
     extra Exchanges are real cost for a cosmetic warning). LIBRARY
     users keep the warning — a future non-calendar-bounded global

@@ -1,6 +1,6 @@
 """Streaming top-k ANN serving over a persisted partitioned IVF index.
 
-The batch side (``queries/r6_ops.py::ann_ivf_partitioned_probe``)
+The batch side (``queries/llm_ops.py::ann_ivf_partitioned_probe``)
 writes the assigned corpus ``partitionBy(centroid_id)`` and probes it
 with static partition pruning. This module is its STREAMING dual (r6
 verdict ask #7): micro-batches of query vectors arrive, each batch

@@ -1,7 +1,7 @@
 """Streaming CURATION manifest: arriving documents are exact-deduped
 against the accumulated corpus, quality-gated, and split-assigned —
 the always-on ingestion half of the batch curation pipeline
-(queries/r6_ops.py::pipeline_curation_e2e), maintained incrementally
+(queries/prep_ops.py::pipeline_curation_e2e), maintained incrementally
 through a persistent digest store.
 
 Reference parity: the reference lands batches and re-runs full-table
@@ -37,6 +37,8 @@ from typing import Callable
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from gcp_etl_spark.functions.hashing import md5_draw
+
 _SPLIT_TRAIN = 0.8
 _SPLIT_VAL = 0.9
 
@@ -58,9 +60,7 @@ def curate_batch(
     kept = h.join(surv, ["h", "doc_id"]).filter(
         F.col("n_chars").between(min_chars, max_chars)
     )
-    u = F.conv(F.substring(F.md5("h"), 1, 8), 16, 10).cast("long") / F.lit(
-        4294967296.0
-    )
+    u = md5_draw("h", uniform=True)
     return kept.select(
         "h",
         "doc_id",

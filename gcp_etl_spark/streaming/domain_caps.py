@@ -1,5 +1,5 @@
 """Streaming PER-DOMAIN document caps: the always-on ingestion dual of
-``queries/r8_ops.py::curation_domain_caps`` (RefinedWeb §URL
+``queries/prep_ops.py::curation_domain_caps`` (RefinedWeb §URL
 filtering) — cap election maintained incrementally against an
 epoch-partitioned candidate store, never rescanning the corpus.
 

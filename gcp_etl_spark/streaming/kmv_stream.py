@@ -20,21 +20,15 @@ from typing import Callable
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-
-def _hash_uniform(col):
-    """The engine-standard md5 uniform in [0, 1): first 8 hex digits
-    over 2^32 — identical integer arithmetic in DuckDB oracles."""
-    return (
-        F.conv(F.substring(F.md5(col.cast("string")), 1, 8), 16, 10)
-        .cast("long")
-        / F.lit(4294967296.0)
-    )
+from gcp_etl_spark.functions.hashing import md5_draw
 
 
 def kmv_bottom_k(df: DataFrame, key_col: str, k: int) -> DataFrame:
     """Bottom-k distinct key hashes: one column ``h`` (double)."""
     return (
-        df.select(_hash_uniform(F.col(key_col)).alias("h"))
+        df.select(
+            md5_draw(F.col(key_col).cast("string"), uniform=True).alias("h")
+        )
         .distinct()
         .orderBy("h")
         .limit(k)

@@ -25,7 +25,7 @@ CONTRACT = {
 
 
 def test_bench_reads_only_the_kept_env_names():
-    """Knobs may not grow back: these six are the whole env surface."""
+    """Knobs may not grow back: these five are the whole env surface."""
     with open(BENCH) as f:
         names = set(re.findall(r"SPARK_GRAFT_[A-Z0-9_]+", f.read()))
     assert names == {
@@ -34,7 +34,6 @@ def test_bench_reads_only_the_kept_env_names():
         "SPARK_GRAFT_BENCH_ONLY",
         "SPARK_GRAFT_BENCH_OUT_DIR",
         "SPARK_GRAFT_ROUND",
-        "SPARK_GRAFT_QUIET_BENIGN",
     }
 
 

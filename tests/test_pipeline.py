@@ -189,19 +189,6 @@ def test_ingest_zip_rejects_non_zip(tmp_path):
         io.ingest_zip(bad, str(tmp_path / "landing2"))
 
 
-def test_compact_parquet_small_files(spark, tmp_path):
-    """64 tiny files -> one right-sized file; values intact."""
-    d = str(tmp_path / "frag")
-    spark.range(10_000).withColumn(
-        "v", F.col("id").cast("double")
-    ).repartition(64).write.mode("overwrite").parquet(d)
-    before, after = io.compact_parquet(spark, d, target_mb=128)
-    assert before == 64 and after == 1
-    back = spark.read.parquet(d)
-    assert back.count() == 10_000
-    assert back.agg(F.sum("id")).collect()[0][0] == 10_000 * 9_999 // 2
-
-
 def test_medallion_rerun_idempotent(spark, tmp_path):
     """The DAG's retry semantics (reference retries a failed task into
     the same bucket layout, ``k8s/dags/etl-gcp-vinicius-campos.py:109-116``):

@@ -541,7 +541,7 @@ def test_bh_fdr_matches_python_stepup(spark):
     the embedded critical literals independently validated against
     math.erf (Python's own erf — no Acklam code shared): each crit_i
     must satisfy 2(1 - Phi(crit_i)) == i*q/m to 1e-8."""
-    from gcp_etl_spark.queries.r10_ops import _bh_crit_literals
+    from gcp_etl_spark.queries.stats_ops import _bh_crit_literals
 
     crits = _bh_crit_literals()
     m, q = 25, 0.10
@@ -780,7 +780,7 @@ def test_fdr_drift_is_batching_invariant(spark):
     disjoint halves of the corpus merged must yield exactly the same
     per-(window, group) decisions as one pass (the streaming
     micro-batch merge contract, same as the W1 monitor's pin)."""
-    from gcp_etl_spark.queries.r10_ops import _bh_crit_literals
+    from gcp_etl_spark.queries.stats_ops import _bh_crit_literals
     from gcp_etl_spark.streaming.windows import (
         fdr_drift,
         group_moment_windows,

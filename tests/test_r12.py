@@ -326,7 +326,7 @@ def test_sprt_matches_pure_python_walk(spark):
     same (ts, event_id)-ordered stream with the same repr literals."""
     import pandas as pd
 
-    from gcp_etl_spark.queries.r12_ops import (
+    from gcp_etl_spark.queries.stats_ops import (
         _SPRT_BOUND_F,
         _SPRT_LA_F,
         _SPRT_LB_F,

@@ -17,13 +17,8 @@ from gcp_etl_spark.llm.similarity import (
     random_projection_buckets,
 )
 from gcp_etl_spark.operators.quantiles import exact_quantiles
-from gcp_etl_spark.queries.r6_ops import (
-    _GD_ITERS,
-    _GD_LR,
-    _IVFPQ_K,
-    ann_ivf_pq_rerank,
-    train_quality_logreg,
-)
+from gcp_etl_spark.queries.llm_ops import _IVFPQ_K, ann_ivf_pq_rerank
+from gcp_etl_spark.queries.ml_ops import _GD_ITERS, _GD_LR, train_quality_logreg
 from gcp_etl_spark.tables import t
 from tests.conftest import SF_SMALL
 
@@ -314,7 +309,7 @@ def test_ivf_partitioned_probe_prunes_and_matches(spark):
     import io as _io
 
     from gcp_etl_spark.llm.ivf import cosine_topk_ivf
-    from gcp_etl_spark.queries.r6_ops import ann_ivf_partitioned_probe
+    from gcp_etl_spark.queries.llm_ops import ann_ivf_partitioned_probe
     from gcp_etl_spark.tables import t
 
     df = ann_ivf_partitioned_probe(spark, SF_SMALL)
@@ -369,7 +364,7 @@ def test_leakage_split_never_splits_near_dup_pairs(spark):
     the registered assignment logic rebuilt at doc granularity."""
     from gcp_etl_spark.llm.cluster import connected_components
     from gcp_etl_spark.queries.llm_ops import _ngram_jaccard_pairs
-    from gcp_etl_spark.queries.r6_ops import _SPLIT_TRAIN, _SPLIT_VAL
+    from gcp_etl_spark.queries.prep_ops import _SPLIT_TRAIN, _SPLIT_VAL
 
     pairs = _ngram_jaccard_pairs(spark, SF_SMALL, df_cap=None)
     cc = connected_components(pairs, src="id_a", dst="id_b")
@@ -410,7 +405,7 @@ def test_ivf_nprobe_sweep_monotone_and_exact_at_full(spark):
     """The nprobe operating curve's contract: recall@5 never decreases
     as more inverted lists are probed, and probing ALL lists is
     brute force (recall exactly 1.0)."""
-    from gcp_etl_spark.queries.r6_ops import ann_ivf_nprobe_sweep
+    from gcp_etl_spark.queries.llm_ops import ann_ivf_nprobe_sweep
 
     rows = ann_ivf_nprobe_sweep(spark, SF_SMALL).collect()
     curve = [(r["nprobe"], r["recall_at_k"]) for r in rows]
@@ -424,7 +419,7 @@ def test_compression_ratio_orders_repetitive_below_diverse(spark):
     """The compression-quality contract: a planted highly repetitive
     document must score strictly below a diverse one, ratios are
     deterministic run-to-run, and every ratio is positive."""
-    from gcp_etl_spark.queries.r6_ops import quality_compression_ratio
+    from gcp_etl_spark.queries.prep_ops import quality_compression_ratio
 
     rep = "spam ham " * 200
     div = " ".join(f"w{i}x{i * 7 % 97}" for i in range(400))

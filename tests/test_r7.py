@@ -212,7 +212,7 @@ def test_bitext_ann_matches_dense_on_aligned_fixture(spark):
     of the dense variant's (sid -> tid) picks."""
     import numpy as np
 
-    from gcp_etl_spark.queries.r7_ops import mine_bitext_margin_ann_df
+    from gcp_etl_spark.queries.llm_ops import mine_bitext_margin_ann_df
 
     rng = np.random.default_rng(11)
     n, dim = 120, 32
@@ -514,7 +514,7 @@ def test_mmr_matches_numpy_reference(spark):
     import numpy as np
 
     from gcp_etl_spark.queries import load_all
-    from gcp_etl_spark.queries.r7_ops import (
+    from gcp_etl_spark.queries.llm_ops import (
         _MMR_K,
         _MMR_LAMBDA,
         _MMR_PROBE,
@@ -618,7 +618,7 @@ def test_k_core_peel_converges_within_fixed_rounds(spark):
     algebra broke, and a full-size result means k stopped binding:
     either way the oracle comparison is no longer vacuous)."""
     from gcp_etl_spark.queries import load_all
-    from gcp_etl_spark.queries.r8_ops import _KC_NODES
+    from gcp_etl_spark.queries.graph_ops import _KC_NODES
     from gcp_etl_spark.tables import t
 
     specs = load_all()
@@ -652,7 +652,7 @@ def test_geo_blocked_join_wraps_antimeridian(spark):
     oracle comparison cannot."""
     import math
 
-    from gcp_etl_spark.queries.r8_ops import (
+    from gcp_etl_spark.queries.scalars import (
         _GEO_R_KM,
         _geo_blocked_pairs,
     )
@@ -700,7 +700,7 @@ def test_geohash_encoding_matches_textbook_reference():
     """geo_geohash_grid's arithmetic-only 30-bit encoder must equal the
     textbook bisection geohash (Niemeyer) on integer-degree points —
     checked exhaustively over the fixture's full coordinate domain."""
-    from gcp_etl_spark.queries.r8_ops import _GH_ALPHABET
+    from gcp_etl_spark.queries.scalars import _GH_ALPHABET
 
     def ref_geohash(lat, lon, length=6):
         lat_r, lon_r = [-90.0, 90.0], [-180.0, 180.0]

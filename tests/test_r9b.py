@@ -66,7 +66,7 @@ def test_point_in_polygon_matches_python_raycast(spark):
     """The generated crossing-expression string must implement the
     classic even-odd ray cast — recomputed per point in pure Python
     with the same semi-open rule."""
-    from gcp_etl_spark.queries.r9b_ops import _PIP_POLY
+    from gcp_etl_spark.queries.scalars import _PIP_POLY
 
     ev = pd.read_parquet(f"{SF_SMALL}/events.parquet")
     lon = ((ev["event_id"] * 7919) % 360 - 180).astype(float).to_numpy()

@@ -410,7 +410,7 @@ def test_bitext_margin_broadcasts_target_side(spark):
     hand-rebuilt copy of the subtree would keep passing even if the
     query itself dropped the F.broadcast hint)."""
     from gcp_etl_spark.queries import load_all
-    from gcp_etl_spark.queries.r6_ops import _bitext_pair_stage
+    from gcp_etl_spark.queries.llm_ops import _bitext_pair_stage
 
     df = load_all()["mine_bitext_margin"].fn(spark, SF_SMALL)
     plan = _plan(df)
@@ -440,7 +440,7 @@ def test_skew_report_scans_fact_once_with_pruned_schema(spark):
     # fan-out WITHOUT the checkpoint and assert the scan schema
     from pyspark.sql import functions as F
 
-    from gcp_etl_spark.queries.r6_ops import _SKEW_KEYS
+    from gcp_etl_spark.queries.scale_ops import _SKEW_KEYS
     from gcp_etl_spark.tables import t
 
     li = t(spark, SF_SMALL, "lineitem")

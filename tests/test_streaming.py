@@ -571,7 +571,7 @@ def test_stream_curation_equals_batch(spark, documents_stream_dir, tmp_path):
     store) must equal the one-shot batch relation for any batching —
     survivors key on content digests and min-doc_id resolves at read,
     so slicing the stream can't change the result."""
-    from gcp_etl_spark.queries.r6_ops import stream_curation_manifest
+    from gcp_etl_spark.queries.streaming_duals import stream_curation_manifest
     from gcp_etl_spark.streaming.curation import curation_sink, read_manifest
 
     src, schema = documents_stream_dir

@@ -26,10 +26,8 @@ import time
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
-os.environ.setdefault("SPARK_GRAFT_QUIET_BENIGN", "1")
-
 from gcp_etl_spark.queries import load_all  # noqa: E402
-from gcp_etl_spark.session import get_spark  # noqa: E402
+from gcp_etl_spark.session import _quiet_benign_warnings, get_spark  # noqa: E402
 
 SCALE_DIR = os.environ.get(
     "SPARK_GRAFT_SCALE_DIR", os.path.join(REPO, ".scale", "sf1.0")
@@ -68,6 +66,7 @@ def _cleanup(spark) -> None:
 
 def run_at(cpus: int, names: list[str], passes: int) -> dict:
     spark = get_spark(f"scale-cores-{cpus}", cpus=cpus)
+    _quiet_benign_warnings(spark)
     specs = load_all()
     sc = spark.sparkContext
     out: dict[str, float] = {}

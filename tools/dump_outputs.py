@@ -14,10 +14,8 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-os.environ.setdefault("SPARK_GRAFT_QUIET_BENIGN", "1")
-
 from gcp_etl_spark.queries import load_all  # noqa: E402
-from gcp_etl_spark.session import get_spark  # noqa: E402
+from gcp_etl_spark.session import _quiet_benign_warnings, get_spark  # noqa: E402
 
 
 def canon(v):
@@ -43,6 +41,7 @@ def main() -> None:
     names = sys.argv[3:]
     specs = load_all()
     spark = get_spark("dump-outputs")
+    _quiet_benign_warnings(spark)
     out = {}
     for name in names:
         df = specs[name].fn(spark, sf_dir)

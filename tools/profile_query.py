@@ -24,10 +24,8 @@ import time
 HERE = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, HERE)
 
-os.environ.setdefault("SPARK_GRAFT_QUIET_BENIGN", "1")
-
 from gcp_etl_spark.queries import load_all  # noqa: E402
-from gcp_etl_spark.session import get_spark  # noqa: E402
+from gcp_etl_spark.session import _quiet_benign_warnings, get_spark  # noqa: E402
 
 
 def main() -> None:
@@ -41,6 +39,7 @@ def main() -> None:
 
     specs = load_all()
     spark = get_spark("profile")
+    _quiet_benign_warnings(spark)
     sc = spark.sparkContext
     tracker = sc.statusTracker()
 
